@@ -32,6 +32,18 @@ from pyspark.sql import DataFrame, SparkSession
 __all__ = ["local_frame"]
 
 
+# escapedStringLiterals is false by default, so backslash escapes are
+# live inside quoted literals: escape the backslash and the quote, and
+# write every control character as a fixed-width \uXXXX escape. A short
+# form such as \0 would swallow the digits after it as an octal escape
+# ("a\x0012" came back as "a\n").
+_STRING_ESCAPES = {
+    ord("\\"): "\\\\",
+    ord("'"): "\\'",
+    **{c: f"\\u{c:04x}" for c in (*range(0x20), 0x7F)},
+}
+
+
 def _sql_literal(v) -> str:
     if v is None:
         return "NULL"
@@ -50,19 +62,7 @@ def _sql_literal(v) -> str:
         # which loses the sign of zero (-0.0 → +0.0) and re-rounds.
         return repr(v) + "D"
     if isinstance(v, str):
-        # escapedStringLiterals is false by default, so backslash
-        # escapes are live inside quoted literals — escape them, the
-        # quote itself, and the control characters that would otherwise
-        # end up raw inside the SQL text.
-        s = (
-            v.replace("\\", "\\\\")
-            .replace("'", "\\'")
-            .replace("\n", "\\n")
-            .replace("\r", "\\r")
-            .replace("\t", "\\t")
-            .replace("\0", "\\0")
-        )
-        return f"'{s}'"
+        return f"'{v.translate(_STRING_ESCAPES)}'"
     if isinstance(v, (list, tuple)):
         return "array(" + ", ".join(_sql_literal(x) for x in v) + ")"
     raise TypeError(

@@ -213,6 +213,44 @@ def pin_eager_observed(df, metrics, drop=()):
     return pin(out, eager=True), obs.get
 
 
+# Runtime-settable SQL confs that get_spark and configure both apply.
+# spark.sql.shuffle.partitions is sized per session, so each sets it.
+SESSION_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # Shuffled-hash joins via the AQE runtime rewrite ONLY (r13,
+    # ADVICE r12): sort-merge pays two per-partition sorts a hash
+    # build skips, but the r12 static opt-in
+    # (preferSortMergeJoin=false) made the PLANNER pick SHJ from
+    # size ESTIMATES, which are unreliable over the cross-join/
+    # aggregate subtrees here — an underestimated build side OOMs,
+    # since SHJ's hash map cannot spill the way SMJ's sort does.
+    # The AQE rewrite decides per partition from ACTUAL map output
+    # bytes, capped at the session's 64 MB broadcast threshold, so
+    # it is size-safe and scales with the data, not the venue.
+    # Interleaved A/B over the 21 bench queries (r13): static+AQE
+    # 17.279 vs AQE-only 17.333 s total, per-query divergences not
+    # reproducible across batteries — a measured tie, so the
+    # scale-safe setting wins. (r12's A/Bs credited the static
+    # conf 16.65 → 15.40 before the AQE threshold existed; with
+    # the runtime rewrite in place the static pick adds risk, not
+    # speed.)
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": str(64 * 1024 * 1024),
+    # events.parquet stores TIMESTAMP(NANOS); Spark has no nanosecond
+    # timestamp type, so read as long and convert in load_table.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # naive timestamp[us] parquet should read as session-UTC
+    # TimestampType directly (not TIMESTAMP_NTZ) — keeps unix_micros
+    # et al. working without a per-column cast; normalize_timestamps
+    # remains the fallback for sessions where this conf is locked.
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
+
+
 def get_spark(app_name: str = "insurance_claim_data_pipeline_spark") -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults applied."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
@@ -220,43 +258,9 @@ def get_spark(app_name: str = "insurance_claim_data_pipeline_spark") -> SparkSes
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(map=SESSION_CONFS)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Shuffled-hash joins via the AQE runtime rewrite ONLY (r13,
-        # ADVICE r12): sort-merge pays two per-partition sorts a hash
-        # build skips, but the r12 static opt-in
-        # (preferSortMergeJoin=false) made the PLANNER pick SHJ from
-        # size ESTIMATES, which are unreliable over the cross-join/
-        # aggregate subtrees here — an underestimated build side OOMs,
-        # since SHJ's hash map cannot spill the way SMJ's sort does.
-        # The AQE rewrite decides per partition from ACTUAL map output
-        # bytes, capped at the session's 64 MB broadcast threshold, so
-        # it is size-safe and scales with the data, not the venue.
-        # Interleaved A/B over the 21 bench queries (r13): static+AQE
-        # 17.279 vs AQE-only 17.333 s total, per-query divergences not
-        # reproducible across batteries — a measured tie, so the
-        # scale-safe setting wins. (r12's A/Bs credited the static
-        # conf 16.65 → 15.40 before the AQE threshold existed; with
-        # the runtime rewrite in place the static pick adds risk, not
-        # speed.)
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            str(64 * 1024 * 1024),
-        )
-        # events.parquet stores TIMESTAMP(NANOS); Spark has no nanosecond
-        # timestamp type, so read as long and convert in load_table.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # naive timestamp[us] parquet should read as session-UTC
-        # TimestampType directly (not TIMESTAMP_NTZ) — keeps unix_micros
-        # et al. working without a per-column cast; normalize_timestamps
-        # remains the fallback for sessions where this conf is locked.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         # Reliable-mode pins (SPARK_GRAFT_PIN_MODE=reliable) write
         # checkpoint blocks that Spark NEVER deletes by default; with
         # the cleaner conf on, a checkpoint is removed once its RDD is
@@ -281,21 +285,9 @@ def configure(spark: SparkSession) -> SparkSession:
     shuffles; sizing it to the session's core count with AQE coalescing
     on is the same policy get_spark applies, and on a real cluster AQE
     makes the initial number non-critical."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    for key, value in SESSION_CONFS.items():
+        spark.conf.set(key, value)
     spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    # shuffled-hash joins via the size-safe AQE runtime rewrite only —
-    # see get_spark for the measured rationale (r13)
-    spark.conf.set(
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        str(64 * 1024 * 1024),
-    )
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     return spark
 
 
@@ -357,17 +349,28 @@ def parquet_num_rows(sf_dir: str, name: str) -> int:
     footers already store. Footer num_rows is exactly the COUNT(*) the
     oracle computes — parquet writers record the row count per file —
     and reading it is still "computing from the parquet inputs", the
-    same metadata Spark's own count aggregate consults. On a real
-    deployment the identical footer read goes through the object-store
-    client; the probe stays O(#files) metadata I/O either way."""
+    same metadata Spark's own count aggregate consults. URIs with a
+    scheme (``s3://``, ``hdfs://``, ``file://``) resolve through
+    ``pyarrow.fs``; the probe stays O(#files) metadata I/O either way.
+
+    Raises FileNotFoundError when no footer is found: the callers size
+    their plans from this count, so a silent 0 (a missing table, or a
+    path the local walk cannot see) would change query output."""
     import pyarrow.parquet as pq
+    from pyarrow import fs
 
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isfile(path):
-        return pq.ParquetFile(path).metadata.num_rows
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-    return total
+    if "://" in path:
+        filesystem, path = fs.FileSystem.from_uri(path)
+    else:
+        filesystem, path = fs.LocalFileSystem(), os.path.abspath(path)
+    if filesystem.get_file_info(path).type == fs.FileType.File:
+        files = [path]
+    else:
+        listing = filesystem.get_file_info(
+            fs.FileSelector(path, allow_not_found=True, recursive=True)
+        )
+        files = [f.path for f in listing if f.is_file and f.path.endswith(".parquet")]
+    if not files:
+        raise FileNotFoundError(f"no parquet footer found for table {name!r} at {path}")
+    return sum(pq.read_metadata(f, filesystem=filesystem).num_rows for f in files)

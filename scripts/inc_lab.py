@@ -140,11 +140,7 @@ def main() -> None:
         n_reuse = plan.count("ReusedExchange")
         n_exch = plan.count("Exchange") - plan.count("ReusedExchange")
         n_scan = plan.count("Scan parquet")
-        out = os.path.join(REPO, "plans", "r13", f"inc_lab_{m}_executed.txt")
-        os.makedirs(os.path.dirname(out), exist_ok=True)
-        with open(out, "w") as f:
-            f.write(plan)
-        print(f"executed {m}: ReusedExchange={n_reuse} Exchange={n_exch} scans={n_scan} -> {out}")
+        print(f"executed {m}: ReusedExchange={n_reuse} Exchange={n_exch} scans={n_scan}")
 
     times: dict[str, list[float]] = {m: [] for m in modes}
     for i in range(n_alt):

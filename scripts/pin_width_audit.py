@@ -21,8 +21,7 @@ patching session alone never intercepts the ~78 lazy
 ``.transform(pin)`` call sites, because Python binds the imported name
 at import time; those queries were silently skipped by the no-pins
 gate). With each pinned frame's column list recorded, walk the final
-OPTIMIZED logical plan (children recursion + subqueriesAll, same
-leaf-walk discipline as plan_scan_audit after ADVICE r07): a
+OPTIMIZED logical plan (children recursion + subqueriesAll): a
 ``Project`` whose single child is a ``LogicalRDD`` and whose output is
 narrower than the child's output is Catalyst telling us exactly which
 pinned columns are dead.

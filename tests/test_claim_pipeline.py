@@ -12,6 +12,10 @@ from insurance_claim_data_pipeline_spark.plans.claim_pipeline import run_pipelin
 from insurance_claim_data_pipeline_spark.plans.claim_queries import ALPHA_PATH, BETA_PATH
 from insurance_claim_data_pipeline_spark.sources.claims import load_alpha, load_beta, load_claims
 
+REFERENCE_OUTPUT = os.path.join(
+    os.path.dirname(BETA_PATH), "reference", "resubmission_candidates.json"
+)
+
 EXPECTED_BOTH = [
     {
         "claim_id": "A123",
@@ -67,10 +71,10 @@ def test_golden_both_files(spark, tmp_path):
 
 def test_golden_beta_only_matches_reference_output(spark, tmp_path):
     """The reference repo checks in the output of a beta-only run —
-    /root/reference/resubmission_candidates.json (1 candidate, B988,
-    original casing preserved)."""
+    resubmission_candidates.json (1 candidate, B988, original casing
+    preserved), vendored as fixtures/reference/."""
     res = run_pipeline(spark, [BETA_PATH], str(tmp_path))
-    with open("/root/reference/resubmission_candidates.json", encoding="utf-8") as f:
+    with open(REFERENCE_OUTPUT, encoding="utf-8") as f:
         reference_out = json.load(f)
     assert res.candidates == reference_out
     assert res.metrics["total_processed"] == 4

@@ -2,7 +2,12 @@
 must actually appear in the executed plan — parquet predicate pushdown,
 column pruning, broadcast joins for dims, TakeOrderedAndProject for
 top-k, and no Python row-eval nodes in JVM-only queries. Catching a
-regression here is catching a 100× slowdown before it ships."""
+regression here is catching a 100× slowdown before it ships.
+
+These are invariants: they hold whatever the budget says. Exact
+per-query counts (exchanges, joins by kind, Python eval, single-partition
+windows, scans per table) are gated for the whole registry by
+``test_plan_budget.py``, whose file an intended plan change rewrites."""
 
 from __future__ import annotations
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 import math
 
 import pytest
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from insurance_claim_data_pipeline_spark.functions.localframe import (
@@ -38,6 +39,39 @@ def test_local_frame_matches_createdataframe(spark):
     got = local_frame(spark, rows, schema)
     assert got.schema == ref.schema
     assert got.collect() == ref.collect()
+
+
+def _canon(v):
+    """Collected value in a comparable form: doubles by repr, which
+    tells -0.0 from 0.0 and makes NaN equal to itself."""
+    if isinstance(v, float):
+        return repr(v)
+    if isinstance(v, (list, tuple)):
+        return [_canon(x) for x in v]
+    return v
+
+
+_doubles = st.none() | st.floats()
+_frame_rows = st.lists(
+    st.tuples(
+        st.none() | st.text(),
+        _doubles,
+        st.none() | st.lists(st.none() | st.lists(_doubles, max_size=3), max_size=3),
+    ),
+    min_size=1,
+    max_size=4,
+)
+
+
+@settings(max_examples=40, deadline=None)
+@given(rows=_frame_rows)
+@example(rows=[("a\x0012", 0.0, None)])  # NUL then digits: not an octal escape
+@example(rows=[("\x01\x1f\x7f\\0\r\n'", -0.0, [[float("nan")], None])])
+def test_local_frame_round_trips_like_createdataframe(spark, rows):
+    schema = "s string, d double, a array<array<double>>"
+    got = local_frame(spark, rows, schema).collect()
+    ref = spark.createDataFrame(rows, schema).collect()
+    assert [_canon(list(r)) for r in got] == [_canon(list(r)) for r in ref]
 
 
 def test_local_frame_no_rdd_leaf(spark):
@@ -113,6 +147,19 @@ def test_parquet_num_rows_matches_count(spark, sf_dir, tmp_path):
     out = str(tmp_path / "t.parquet")
     spark.range(1234).repartition(3).write.parquet(out)
     assert parquet_num_rows(str(tmp_path), "t") == 1234
+    assert parquet_num_rows(f"file://{tmp_path}", "t") == 1234
+
+
+def test_parquet_num_rows_raises_without_footer(tmp_path):
+    """A missing table must fail loudly: a 0 here silently sends the
+    LSH/simhash sizing probes to their smallest rung."""
+    from insurance_claim_data_pipeline_spark.session import parquet_num_rows
+
+    with pytest.raises(FileNotFoundError, match="'absent'"):
+        parquet_num_rows(str(tmp_path), "absent")
+    (tmp_path / "empty.parquet").mkdir()
+    with pytest.raises(FileNotFoundError):
+        parquet_num_rows(f"file://{tmp_path}", "empty")
 
 
 def test_incremental_sizes_agg_is_pinned(spark, sf_dir):

@@ -8,6 +8,8 @@ block managers (fastest; unrecoverable on executor loss — fine for
 local[*] where executor loss IS driver loss), ``reliable`` routes the
 same pins through ``DataFrame.checkpoint`` (checkpoint-dir blocks,
 recoverable) for real multi-executor deployments.
+
+Also here: the session conf block get_spark and configure share.
 """
 
 from __future__ import annotations
@@ -193,3 +195,9 @@ def test_pin_eager_observed_empty_frame(spark):
     )
     assert m == {"n": 0, "changed": None}
     assert pinned.count() == 0
+
+
+def test_session_confs_read_back_after_configure(spark):
+    session.configure(spark)
+    for key, value in session.SESSION_CONFS.items():
+        assert spark.conf.get(key) == value, key
