@@ -469,7 +469,7 @@ def sim_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         # fail-soft: rows with no embedding can neither train nor match
         .filter(F.col("embedding").isNotNull())
         .select("vec_id", as_double("embedding").alias("v"))
-        .cache()  # scanned once per Lloyd round + twice in the search
+        .transform(pin)  # scanned once per Lloyd round + twice in the search
     )
     return _ivf_topk(emb, train_ivf_centroids(emb))
 
@@ -1412,9 +1412,9 @@ def sim_topk_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("embedding").isNotNull())
         .select("vec_id", as_double("embedding").alias("v"))
         # scanned once per Lloyd round (each round's cell collect is
-        # its own job) + twice in encode/LUT — same cache the IVF
+        # its own job) + twice in encode/LUT — same pin the IVF
         # trained twin carries
-        .cache()
+        .transform(pin)
     )
     cb = train_pq_codebooks(emb)
     subv = _pq_subvectors(emb)

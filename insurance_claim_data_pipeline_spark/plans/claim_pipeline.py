@@ -1,12 +1,16 @@
 """End-to-end claim resubmission pipeline (reference: pipeline(),
 claim_pipeline.py:155-233), Spark-first.
 
-Execution shape: one cached canonical DataFrame feeds (a) the candidate
-filter+projection and (b) a single-pass metrics aggregate of conditional
-counts — preserving the reference's one-traversal property (SURVEY.md §4)
-without a driver-side row loop. Candidates are collected to the driver
-only at the JSON-array sink (O1), justified because candidates ≪ input by
-construction; the scalable native variant is write_candidates_jsonl.
+Execution shape: one Spark job. The canonical claims frame carries the
+nine metric counters as an ``observe`` node, so the candidate
+filter+projection and the metrics come out of the same scan, which keeps
+the reference's one-traversal property (SURVEY.md §4) without a
+driver-side row loop or a cache. Corrupt rows are flagged by the CSV and
+JSON readers themselves (sources/claims.py), so no consumer needs the
+full rows materialized first. Candidates are collected to the driver only
+at the JSON-array sink (O1) and put in file-row order there, justified
+because candidates ≪ input by construction; the scalable native variant
+is write_candidates_jsonl.
 """
 
 from __future__ import annotations
@@ -16,7 +20,7 @@ import os
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.claims import exclusion_reason, is_eligible, recommended_changes
@@ -39,14 +43,11 @@ def candidates_frame(claims: DataFrame) -> DataFrame:
     )
 
 
-def metrics_frame(claims: DataFrame) -> DataFrame:
-    """A1-A4 + intended-semantics A3 in ONE aggregate pass (conditional
-    counts), so the scan is not recomputed per counter."""
-    corrupt = (
-        F.col("_corrupt_record").isNotNull()
-        if "_corrupt_record" in claims.columns
-        else F.lit(False)
-    )
+def metric_counts() -> list:
+    """A1-A4 + intended-semantics A3 as nine conditional counts over the
+    router's claims frame, attached to the candidate job with ``observe``
+    so no second pass scans the input for them."""
+    corrupt = F.col("_corrupt_record").isNotNull()
     eligible = is_eligible()
     excl = exclusion_reason()
 
@@ -55,7 +56,7 @@ def metrics_frame(claims: DataFrame) -> DataFrame:
             F.when(~corrupt & ~eligible & (excl == name), 1)
         ).alias(name)
 
-    return claims.agg(
+    return [
         F.count(F.lit(1)).alias("total_processed"),
         F.count(F.when(F.col("source_system") == "alpha", 1)).alias("alpha"),
         F.count(F.when(F.col("source_system") == "beta", 1)).alias("beta"),
@@ -65,7 +66,7 @@ def metrics_frame(claims: DataFrame) -> DataFrame:
         bucket("too_recent"),
         bucket("non_retryable_or_ambiguous"),
         F.count(F.when(corrupt, 1)).alias("malformed"),
-    )
+    ]
 
 
 @dataclass
@@ -82,22 +83,19 @@ def run_pipeline(
     """The reference's pipeline(): ingest → normalize → eligibility →
     JSON-array sink (O1) + metrics log sink (O2)."""
     routed = load_claims(spark, input_files)
-    claims = routed.claims.cache()
-    try:
-        cand_rows = (
-            candidates_frame(claims)
-            # O1 insertion order: file order, then split offset within the
-            # file, then scan order within the split. (_block_start comes
-            # from _metadata — stable under Spark's split bin-packing;
-            # monotonically_increasing_id alone is only ordered within one
-            # task, so a multi-split file needs the block offset first.)
-            .orderBy("_file_idx", "_block_start", "_row_idx")
-            .drop("_file_idx", "_block_start", "_row_idx")
-            .collect()
-        )
-        m = metrics_frame(claims).collect()[0].asDict()
-    finally:
-        claims.unpersist()
+    observation = Observation()
+    claims = routed.claims.observe(observation, *metric_counts())
+    # O1 insertion order: file order, then split offset within the file,
+    # then scan order within the split. (_block_start comes from
+    # _metadata, stable under Spark's split bin-packing;
+    # monotonically_increasing_id alone is only ordered within one task,
+    # so a multi-split file needs the block offset first.) The candidates
+    # are on the driver anyway, so they are sorted there.
+    cand_rows = sorted(
+        candidates_frame(claims).collect(),
+        key=lambda r: (r["_file_idx"], r["_block_start"], r["_row_idx"]),
+    )
+    m = observation.get
 
     candidates = [{c: row[c] for c in CANDIDATE_COLUMNS} for row in cand_rows]
     metrics = {

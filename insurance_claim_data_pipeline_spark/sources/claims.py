@@ -7,9 +7,10 @@ scan with projection expressions — Catalyst collapses them into the
 file scan, preserving the reference's single-pass property.
 
 Fail-soft mapping:
-- X1 (per-record, :190-212): PERMISSIVE mode + a _corrupt_record column;
-  corrupt rows are counted as 'malformed' and excluded from the
-  canonical stream.
+- X1 (per-record, :190-212): PERMISSIVE mode + a _corrupt_record column
+  (with CSV column pruning off, so every consumer sees the full-width
+  parse); corrupt rows are counted as 'malformed' and excluded from the
+  candidates.
 - X2 (per-file, :176/:213-215): unreadable/unsupported files are
   skipped with a warning and counted once as malformed. Spark is more
   granular than the reference here (a bad row doesn't abandon the rest
@@ -27,6 +28,7 @@ the case where mid() alone would interleave.
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
 import stat
@@ -37,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.cleaning import lower_norm, none_to_null, parse_claim_date, trim_null
-from ..schemas import ALPHA_RAW_SCHEMA, BETA_RAW_SCHEMA
+from ..schemas import ALPHA_RAW_SCHEMA, BETA_RAW_SCHEMA, CLAIM_SCHEMA
 
 logger = logging.getLogger("insurance_claim_data_pipeline_spark.sources")
 
@@ -48,20 +50,10 @@ def _with_corrupt(schema: T.StructType) -> T.StructType:
     return T.StructType(list(schema.fields) + [T.StructField(_CORRUPT, T.StringType(), True)])
 
 
-def load_alpha(spark: SparkSession, path: str) -> DataFrame:
-    """S1+P1+P3+F1-F4: CSV scan → canonical claim DataFrame.
-
-    Columns are read as raw strings (csv.DictReader semantics,
-    claim_pipeline.py:84); all cleanup is expression-level.
-    """
-    raw = spark.read.csv(
-        path,
-        header=True,
-        schema=_with_corrupt(ALPHA_RAW_SCHEMA),
-        mode="PERMISSIVE",
-        columnNameOfCorruptRecord=_CORRUPT,
-    )
-    return raw.select(
+def alpha_canonical() -> list:
+    """P1+P3+F1-F4: the 7 canonical columns over a raw alpha CSV frame;
+    the batch loader and the streaming twin share it."""
+    return [
         trim_null("claim_id").alias("claim_id"),
         trim_null("patient_id").alias("patient_id"),
         trim_null("procedure_code").alias("procedure_code"),
@@ -69,18 +61,58 @@ def load_alpha(spark: SparkSession, path: str) -> DataFrame:
         lower_norm("status").alias("status"),
         parse_claim_date("submitted_at").alias("submitted_at"),
         F.lit("alpha").alias("source_system"),
+    ]
+
+
+def beta_canonical() -> list:
+    """P2+P3+F1-F3: the 7 canonical columns over a raw beta JSON frame.
+    Beta has no 'None'-literal handling (claim_pipeline.py:110), an
+    asymmetry with alpha kept on purpose."""
+    return [
+        trim_null("id").alias("claim_id"),
+        trim_null("member").alias("patient_id"),
+        trim_null("code").alias("procedure_code"),
+        trim_null("error_msg").alias("denial_reason"),
+        lower_norm("status").alias("status"),
+        parse_claim_date("date").alias("submitted_at"),
+        F.lit("beta").alias("source_system"),
+    ]
+
+
+def _row_keys() -> list:
+    """The corrupt-record flag and the O1 order keys every batch loader
+    adds after the canonical columns."""
+    return [
         F.col(_CORRUPT),
         F.col("_metadata.file_block_start").alias("_block_start"),
         F.monotonically_increasing_id().alias("_row_idx"),
+    ]
+
+
+def load_alpha(spark: SparkSession, path: str) -> DataFrame:
+    """S1: CSV scan → canonical claim DataFrame.
+
+    Columns are read as raw strings (csv.DictReader semantics,
+    claim_pipeline.py:84); all cleanup is expression-level. Column
+    pruning is off for this read: a pruned CSV scan tokenizes only the
+    columns a query references, so a row with an extra field would not
+    be flagged in ``_corrupt_record`` and would reach the candidates.
+    """
+    raw = spark.read.option("columnPruning", False).csv(
+        path,
+        header=True,
+        schema=_with_corrupt(ALPHA_RAW_SCHEMA),
+        mode="PERMISSIVE",
+        columnNameOfCorruptRecord=_CORRUPT,
     )
+    return raw.select(*alpha_canonical(), *_row_keys())
 
 
 def load_beta(spark: SparkSession, path: str) -> DataFrame:
-    """S2+P2+P3+F1-F3: whole-file JSON array scan → canonical claims.
+    """S2: whole-file JSON array scan → canonical claims.
 
     multiLine=True because the file is one top-level array, not JSONL
-    (claim_pipeline.py:104 json.load). Beta has no 'None'-literal
-    handling (:110) — asymmetry with alpha preserved.
+    (claim_pipeline.py:104 json.load).
     """
     raw = spark.read.json(
         path,
@@ -89,18 +121,7 @@ def load_beta(spark: SparkSession, path: str) -> DataFrame:
         mode="PERMISSIVE",
         columnNameOfCorruptRecord=_CORRUPT,
     )
-    return raw.select(
-        trim_null("id").alias("claim_id"),
-        trim_null("member").alias("patient_id"),
-        trim_null("code").alias("procedure_code"),
-        trim_null("error_msg").alias("denial_reason"),
-        lower_norm("status").alias("status"),
-        parse_claim_date("date").alias("submitted_at"),
-        F.lit("beta").alias("source_system"),
-        F.col(_CORRUPT),
-        F.col("_metadata.file_block_start").alias("_block_start"),
-        F.monotonically_increasing_id().alias("_row_idx"),
-    )
+    return raw.select(*beta_canonical(), *_row_keys())
 
 
 @dataclass
@@ -194,32 +215,13 @@ def load_claims(spark: SparkSession, paths: list[str]) -> RouterResult:
             logger.exception("Failed to process file %s", path)
             failed.append(path)
     if dfs:
-        claims = dfs[0]
-        for df in dfs[1:]:
-            claims = claims.unionByName(df)
+        claims = functools.reduce(DataFrame.unionByName, dfs)
     else:
-        empty_schema = _with_corrupt(
-            T.StructType(
-                [
-                    T.StructField("claim_id", T.StringType()),
-                    T.StructField("patient_id", T.StringType()),
-                    T.StructField("procedure_code", T.StringType()),
-                    T.StructField("denial_reason", T.StringType()),
-                    T.StructField("status", T.StringType()),
-                    T.StructField("submitted_at", T.DateType()),
-                    T.StructField("source_system", T.StringType()),
-                ]
-            )
-        )
         claims = spark.createDataFrame(
             [],
-            T.StructType(
-                list(empty_schema.fields)
-                + [
-                    T.StructField("_block_start", T.LongType()),
-                    T.StructField("_row_idx", T.LongType()),
-                    T.StructField("_file_idx", T.IntegerType()),
-                ]
-            ),
+            _with_corrupt(CLAIM_SCHEMA)
+            .add("_block_start", T.LongType())
+            .add("_row_idx", T.LongType())
+            .add("_file_idx", T.IntegerType()),
         )
     return RouterResult(claims=claims, skipped_files=skipped, failed_files=failed)

@@ -1,10 +1,10 @@
 """Streaming execution of the claim resubmission pipeline.
 
 The reference is a one-shot batch job (claim_pipeline.py:155-233); this
-module runs the SAME normalize + eligibility expressions (S1/S2, P1-P3,
-F1-F4, E1-E7 — imported from functions/cleaning.py and
-functions/claims.py, not re-implemented) over Structured Streaming file
-sources, modeling the production shape where claim files land in a
+module runs the SAME canonical projections (P1-P3, F1-F4 — the batch
+loaders' ``alpha_canonical``/``beta_canonical``) and candidate filter
+(E1-E7 + P4 — the batch ``candidates_frame``) over Structured Streaming
+file sources, modeling the production shape where claim files land in a
 drop-directory continuously. The whole pipeline is stateless
 (project + filter), so it runs in append mode with no watermark and
 scales linearly with arrival rate — every micro-batch is one narrow
@@ -18,18 +18,17 @@ input files.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..functions.claims import is_eligible, recommended_changes
-from ..functions.cleaning import lower_norm, none_to_null, parse_claim_date, trim_null
+from ..plans.claim_pipeline import candidates_frame
 from ..plans.claim_queries import CANDIDATES_ORACLE
 from ..registry import register
 from ..schemas import ALPHA_RAW_SCHEMA, BETA_RAW_SCHEMA
+from ..sources.claims import alpha_canonical, beta_canonical
 
 
 def alpha_claims_stream(spark: SparkSession, dir_path: str) -> DataFrame:
     """Streaming S1: watch a directory for alpha CSV files; emit
-    canonical claim rows (same projection as sources.claims.load_alpha,
+    canonical claim rows (the projection sources.claims.load_alpha uses,
     claim_pipeline.py:81-99)."""
     raw = (
         spark.readStream.schema(ALPHA_RAW_SCHEMA)
@@ -37,15 +36,7 @@ def alpha_claims_stream(spark: SparkSession, dir_path: str) -> DataFrame:
         .option("pathGlobFilter", "*.csv")
         .csv(dir_path)
     )
-    return raw.select(
-        trim_null("claim_id").alias("claim_id"),
-        trim_null("patient_id").alias("patient_id"),
-        trim_null("procedure_code").alias("procedure_code"),
-        none_to_null("denial_reason").alias("denial_reason"),
-        lower_norm("status").alias("status"),
-        parse_claim_date("submitted_at").alias("submitted_at"),
-        F.lit("alpha").alias("source_system"),
-    )
+    return raw.select(*alpha_canonical())
 
 
 def beta_claims_stream(spark: SparkSession, dir_path: str) -> DataFrame:
@@ -57,15 +48,7 @@ def beta_claims_stream(spark: SparkSession, dir_path: str) -> DataFrame:
         .option("pathGlobFilter", "*.json")
         .json(dir_path)
     )
-    return raw.select(
-        trim_null("id").alias("claim_id"),
-        trim_null("member").alias("patient_id"),
-        trim_null("code").alias("procedure_code"),
-        trim_null("error_msg").alias("denial_reason"),
-        lower_norm("status").alias("status"),
-        parse_claim_date("date").alias("submitted_at"),
-        F.lit("beta").alias("source_system"),
-    )
+    return raw.select(*beta_canonical())
 
 
 def claims_stream(spark: SparkSession, dir_path: str) -> DataFrame:
@@ -73,17 +56,6 @@ def claims_stream(spark: SparkSession, dir_path: str) -> DataFrame:
     into the canonical stream (extension dispatch via pathGlobFilter)."""
     return alpha_claims_stream(spark, dir_path).unionByName(
         beta_claims_stream(spark, dir_path)
-    )
-
-
-def candidates_stream(claims: DataFrame) -> DataFrame:
-    """E7 + P4 on a stream: eligible claims → candidate records.
-    Stateless (append-mode) — no watermark, no state store."""
-    return claims.filter(is_eligible()).select(
-        "claim_id",
-        F.col("denial_reason").alias("resubmission_reason"),
-        "source_system",
-        recommended_changes().alias("recommended_changes"),
     )
 
 
@@ -109,5 +81,5 @@ def claims_candidates_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixtures = os.path.abspath(
         os.path.join(os.path.dirname(__file__), "..", "..", "fixtures")
     )
-    stream = candidates_stream(claims_stream(spark, fixtures))
+    stream = candidates_frame(claims_stream(spark, fixtures))
     return run_stream_to_memory(stream, spark, output_mode="append")

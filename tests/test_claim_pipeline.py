@@ -263,30 +263,80 @@ def test_classifier_containment_and_order(spark):
     }
 
 
+BAD_ALPHA = (
+    "claim_id,patient_id,procedure_code,denial_reason,submitted_at,status\n"
+    "A201,P1,99213,Missing modifier,2025-07-01,denied\n"
+    '"A202,unterminated-quote,99,x\n'
+    "A203,P3,99214,Incorrect NPI,2025-07-02,denied\n"
+)
+
+
 def test_corrupt_rows_counted_as_malformed(spark, tmp_path):
     """X1 (claim_pipeline.py:190-212): a malformed record is counted as
     malformed and skipped; the rest of the file still processes."""
-    from insurance_claim_data_pipeline_spark.plans.claim_pipeline import metrics_frame
-
     bad_csv = tmp_path / "emr_bad.csv"
-    bad_csv.write_text(
-        "claim_id,patient_id,procedure_code,denial_reason,submitted_at,status\n"
-        'A201,P1,99213,Missing modifier,2025-07-01,denied\n'
-        '"A202,unterminated-quote,99,x\n'
-        "A203,P3,99214,Incorrect NPI,2025-07-02,denied\n"
-    )
-    routed = load_claims(spark, [str(bad_csv)])
-    # cache() materializes the full rows first — required for CSV corrupt-
-    # record accounting (column pruning would otherwise re-parse only the
-    # referenced columns and miss malformed-ness); run_pipeline does the same
-    claims = routed.claims.cache()
-    try:
-        m = metrics_frame(claims).collect()[0].asDict()
-    finally:
-        claims.unpersist()
-    assert m["malformed"] == 1
+    bad_csv.write_text(BAD_ALPHA)
+    m = run_pipeline(spark, [str(bad_csv)], str(tmp_path)).metrics
+    assert m["excluded_by_reason"]["malformed"] == 1
     assert m["total_processed"] == 3
     assert m["flagged_for_resubmission"] == 2
+
+
+def test_extra_field_row_is_corrupt_for_every_consumer(spark, tmp_path):
+    """A row with one field too many is corrupt. A column-pruned CSV
+    scan tokenizes only the referenced columns and would not flag it, so
+    an uncached consumer of load_claims must still see the full-width
+    parse: neither the candidate frame nor the JSONL sink may emit it."""
+    from insurance_claim_data_pipeline_spark.plans.claim_pipeline import (
+        candidates_frame,
+        write_candidates_jsonl,
+    )
+
+    bad_csv = tmp_path / "emr_extra.csv"
+    bad_csv.write_text(BAD_ALPHA + "A204,P4,99215,Missing modifier,2025-07-03,denied,extra\n")
+    claims = load_claims(spark, [str(bad_csv)]).claims
+    assert sorted(r["claim_id"] for r in candidates_frame(claims).collect()) == ["A201", "A203"]
+
+    out = tmp_path / "jsonl"
+    write_candidates_jsonl(claims, str(out))
+    written = [json.loads(line) for p in out.glob("part-*.json") for line in p.read_text().splitlines()]
+    assert sorted(c["claim_id"] for c in written) == ["A201", "A203"]
+
+    m = run_pipeline(spark, [str(bad_csv)], str(tmp_path)).metrics
+    assert m["excluded_by_reason"]["malformed"] == 2
+    assert m["flagged_for_resubmission"] == 2
+
+
+def test_pipeline_runs_as_one_spark_job(spark, tmp_path):
+    """Candidates and all nine metric counters come out of one job: the
+    metrics are observed on the frame the candidate collect runs, with
+    no cache, no range-partitioned sort and no second aggregate."""
+    sc = spark.sparkContext
+    group = "claims-one-job"
+    sc.setJobGroup(group, "run_pipeline")
+    try:
+        res = run_pipeline(spark, [ALPHA_PATH, BETA_PATH], str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res.candidates == EXPECTED_BOTH
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_empty_plan_yields_zero_metrics(spark, tmp_path):
+    """No readable input leaves an empty relation under the observed
+    metrics: run_pipeline must still return zero counts and no
+    candidates, for an empty input list and for only unsupported
+    files."""
+    txt = tmp_path / "notes.txt"
+    txt.write_text("hello")
+    for inputs in ([], [str(txt)]):
+        res = run_pipeline(spark, inputs, str(tmp_path))
+        assert res.candidates == []
+        m = res.metrics
+        assert m["total_processed"] == 0
+        assert m["by_source"] == {"alpha": 0, "beta": 0}
+        assert m["flagged_for_resubmission"] == 0
+        assert set(m["excluded_by_reason"].values()) == {0}
 
 
 def test_cli_subprocess(tmp_path):
@@ -320,9 +370,6 @@ def test_o1_order_survives_multisplit_csv(spark, tmp_path):
     emit candidates in exact file-row order: the (_file_idx,
     _block_start, _row_idx) sort key — not mid() alone — carries the
     contract once a file spans tasks."""
-    from insurance_claim_data_pipeline_spark.plans.claim_pipeline import candidates_frame
-    from insurance_claim_data_pipeline_spark.sources.claims import load_claims
-
     n = 5000
     path = str(tmp_path / "big_alpha.csv")
     with open(path, "w", encoding="utf-8") as f:
@@ -338,15 +385,11 @@ def test_o1_order_survives_multisplit_csv(spark, tmp_path):
         spark.conf.set("spark.sql.files.openCostInBytes", "0")
         claims = load_claims(spark, [path]).claims
         assert claims.rdd.getNumPartitions() > 1, "file did not split; test vacuous"
-        got = [
-            r["claim_id"]
-            for r in candidates_frame(claims)
-            .orderBy("_file_idx", "_block_start", "_row_idx")
-            .collect()
-        ]
+        res = run_pipeline(spark, [path], str(tmp_path))
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
         spark.conf.set("spark.sql.files.openCostInBytes", old_cost)
+    got = [c["claim_id"] for c in res.candidates]
     assert got == [f"C{i:06d}" for i in range(n)]
 
 

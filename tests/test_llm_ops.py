@@ -255,6 +255,18 @@ def test_ivf_trained_recall_at_least_fixed(spark, sf_dir):
     assert sorted(map(tuple, t1)) == sorted(map(tuple, t2))
 
 
+@pytest.mark.parametrize("name", ["sim_topk_ivf_trained", "sim_topk_pq_trained"])
+def test_trained_ann_leaves_no_sql_cache(spark, sf_dir, name):
+    """The trained quantizers read their embeddings projection once per
+    Lloyd round and again in the search. A ``.cache()`` there stays in the
+    session's cache manager after the query, and later plans over the
+    same fragment read it instead of the table; a pin leaves nothing
+    behind."""
+    spark.catalog.clearCache()
+    assert getattr(similarity, name)(spark, sf_dir).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_pii_redaction_positive_matches(spark):
     """The registry query proves regex-dialect parity on clean text; the
     positive-match semantics are locked here on literal rows."""

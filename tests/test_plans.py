@@ -39,12 +39,6 @@ def test_q3_broadcasts_and_topk(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan  # top-10 never global-sorts
 
 
-def test_q5_all_dims_broadcast(spark, sf_dir):
-    plan = physical_plan(spark, sf_dir, "q5_local_supplier_volume")
-    assert plan.count("BroadcastHashJoin") >= 3
-    assert "CartesianProduct" not in plan
-
-
 def test_global_topk_is_take_ordered(spark, sf_dir):
     plan = physical_plan(spark, sf_dir, "sort_topk_global")
     assert "TakeOrderedAndProject" in plan
@@ -510,20 +504,6 @@ def test_corr_matrix_single_scan_no_join(spark, sf_dir):
     assert plan.count("FileScan") == 1 or plan.count("Scan parquet") == 1
 
 
-def test_woe_iv_no_single_partition_window(spark, sf_dir):
-    """Binning must come from the two-level distributed rank: a window
-    with an empty partition spec over the fact table would be the
-    single-partition anti-pattern."""
-    plan = physical_plan(spark, sf_dir, "feat_woe_iv")
-    import re
-
-    # every Window node must carry a partition spec (windowspecdefinition
-    # with a non-empty partition list renders as "partitionBy" args in
-    # the Window operator's string: Window [...], [part], [order])
-    for m in re.finditer(r"Window \[[^\]]*\], \[(?P<part>[^\]]*)\], \[[^\]]*\]", plan):
-        assert m.group("part").strip() != ""
-
-
 def test_ivfpq_probe_shape(spark, sf_dir):
     """The composed IVFADC plan must keep its scale guarantees: probes
     and the query LUT broadcast (no shuffled Q-side), the code/cluster
@@ -542,17 +522,6 @@ def test_span_dedup_windows_are_per_doc(spark, sf_dir):
     plan = physical_plan(spark, sf_dir, "text_span_dedup")
     for m in re.finditer(r"Window \[[^\]]*\], \[(?P<part>[^\]]*)\], \[[^\]]*\]", plan):
         assert m.group("part").strip() != ""
-
-
-def test_rank_stats_no_single_partition_window(spark, sf_dir):
-    """Mann-Whitney and Spearman must rank through the two-level
-    distributed prefix: every Window node carries a partition spec."""
-    import re
-
-    for name in ("stats_mann_whitney", "stats_spearman_corr"):
-        plan = physical_plan(spark, sf_dir, name)
-        for m in re.finditer(r"Window \[[^\]]*\], \[(?P<part>[^\]]*)\], \[[^\]]*\]", plan):
-            assert m.group("part").strip() != "", name
 
 
 def test_hilbert_unit_steps_and_beats_morton_locality(spark):
