@@ -11,12 +11,20 @@ master/memory knobs which belong to spark-submit there:
 - Session time zone pinned to UTC so timestamp semantics match the
   DuckDB oracle (UTC-naive) bit-for-bit.
 - Arrow enabled for the few Pandas-UDF paths (multimodal decode).
+- Tungsten pages of 4 MB (``spark.buffer.pageSize``) instead of the
+  size Spark derives from the heap (64 MB under the 16 GB local
+  driver), so a task's hash aggregate, sort or shuffle write over a
+  few hundred rows no longer zero-fills a 64 MB page. A task's page
+  table holds 8192 pages, so 4 MB pages still address 32 GB per task.
+  A static core conf: on a cluster spark-submit owns it, like driver
+  memory.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -260,6 +268,19 @@ def get_spark(app_name: str = "insurance_claim_data_pipeline_spark") -> SparkSes
         .config("spark.sql.shuffle.partitions", cpus)
         .config(map=SESSION_CONFS)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # Spark sizes Tungsten pages as execution pool / cores / 16,
+        # capped at 64 MB, and the 16 GB heap reaches the cap: every
+        # task running a hash aggregate, a sort or a serialized shuffle
+        # write zero-fills a 64 MB long[] even over 150 rows, and each
+        # broadcast relation keeps page-sized buffers.
+        # TaskMemoryManager's page table holds 8192 pages per task, so
+        # 4 MB pages still address 32 GB per task, twice the default
+        # heap: no task runs out of page numbers before it runs out of
+        # memory. A record larger than a page gets a page of its own
+        # (allocatePage(max(pageSize, required))), so large payloads
+        # are unaffected. A static core conf: configure() cannot set
+        # it on an external session, where spark-submit owns it.
+        .config("spark.buffer.pageSize", "4m")
         .config("spark.ui.enabled", "false")
         # Reliable-mode pins (SPARK_GRAFT_PIN_MODE=reliable) write
         # checkpoint blocks that Spark NEVER deletes by default; with
@@ -326,7 +347,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
+    except AnalysisException:
         pass  # conf may be driver-locked; normalize_timestamps covers it
     return normalize_timestamps(spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")))
 

@@ -350,14 +350,6 @@ def test_mixture_weights_broadcast_rates(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_scd2_single_shuffle(spark, sf_dir):
-    """Every stage of the gaps-and-islands derivation reuses the
-    user_id hash partitioning: exactly ONE Exchange in the plan."""
-    plan = physical_plan(spark, sf_dir, "warehouse_scd2_history")
-    assert plan.count("Exchange") == 1
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
 def test_merge_upsert_no_cartesian_broadcast_anti(spark, sf_dir):
     """MERGE: the full-outer join must be a key join (SMJ — full outer
     cannot broadcast), the delete filter a broadcast anti join."""
@@ -485,23 +477,6 @@ def test_zorder_localizes_both_dimensions(spark):
     plan = physical_plan(spark, "/root/testdata/sf0.01", "sort_zorder_interleave")
     assert "rangepartitioning" in plan.lower()
     assert "CartesianProduct" not in plan
-
-
-def test_feat_scale_numeric_broadcasts_stats(spark, sf_dir):
-    """The 3-row group-stats frame must broadcast back onto the fact
-    table — a SortMergeJoin here would shuffle the whole fact side for
-    a 3-row dimension."""
-    plan = physical_plan(spark, sf_dir, "feat_scale_numeric")
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_corr_matrix_single_scan_no_join(spark, sf_dir):
-    """All 15 moments come from ONE aggregate over lineitem; any join
-    node means the one-pass shape regressed to per-pair scans."""
-    plan = physical_plan(spark, sf_dir, "stats_corr_matrix")
-    assert "Join" not in plan
-    assert plan.count("FileScan") == 1 or plan.count("Scan parquet") == 1
 
 
 def test_ivfpq_probe_shape(spark, sf_dir):

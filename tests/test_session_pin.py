@@ -9,7 +9,9 @@ local[*] where executor loss IS driver loss), ``reliable`` routes the
 same pins through ``DataFrame.checkpoint`` (checkpoint-dir blocks,
 recoverable) for real multi-executor deployments.
 
-Also here: the session conf block get_spark and configure share.
+Also here: the session conf block get_spark and configure share, the
+Tungsten page size get_spark sets, and the one conf error load_table
+tolerates.
 """
 
 from __future__ import annotations
@@ -201,3 +203,31 @@ def test_session_confs_read_back_after_configure(spark):
     session.configure(spark)
     for key, value in session.SESSION_CONFS.items():
         assert spark.conf.get(key) == value, key
+
+
+def test_tungsten_pages_are_small_and_address_the_heap(spark):
+    """get_spark's 4 MB pages: Spark's own sizing gives 64 MB pages
+    under the 16 GB driver, which every aggregate, sort and broadcast
+    zero-fills however few rows it holds. The page table's 8192 pages
+    per task must still cover the whole heap."""
+    jvm = spark.sparkContext._jvm
+    page = jvm.org.apache.spark.SparkEnv.get().memoryManager().pageSizeBytes()
+    assert page <= 4 * 1024 * 1024
+    assert 8192 * page >= jvm.java.lang.Runtime.getRuntime().maxMemory()
+
+
+def test_load_table_swallows_only_the_locked_conf_error(spark, monkeypatch):
+    real_set = spark.conf.set
+
+    def locked(key, value):
+        real_set("spark.sql.warehouse.dir", "/elsewhere")  # static conf: AnalysisException
+
+    monkeypatch.setattr(spark.conf, "set", locked)
+    assert session.load_table(spark, SF_DIR, "region").count() > 0
+
+    def broken(key, value):
+        raise RuntimeError("conf service down")
+
+    monkeypatch.setattr(spark.conf, "set", broken)
+    with pytest.raises(RuntimeError, match="conf service down"):
+        session.load_table(spark, SF_DIR, "region")
