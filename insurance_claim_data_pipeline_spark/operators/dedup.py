@@ -400,10 +400,7 @@ WHERE bit_count(xor(ha, hb)) <= {HAMMING_MAX}
 def simhash_fingerprints(doc: DataFrame) -> DataFrame:
     """60-bit SimHash fingerprints ``(doc_id, simhash)`` — the
     rung-INDEPENDENT stage of :func:`dedup_simhash` (md5-nibble feature
-    bits, per-bit majority vote). Extracted r12 (pure extraction,
-    expressions unchanged) so the rung lab (scripts/simhash_rungs.py)
-    can measure the banded candidate stage per config against one
-    shared fingerprint frame."""
+    bits, per-bit majority vote)."""
     feat = shingle_rows(doc).withColumnRenamed("shingle", "feature")
     tokhash = feat.select("doc_id", F.md5("feature").alias("h"))
     bits = tokhash.select(
@@ -975,7 +972,7 @@ def incremental_dedup_frame(doc: DataFrame, max_df: int | None = None) -> DataFr
     # per document (sizes, not shingles — cheap at any scale); with it
     # the executed plan drops 18 → 14 exchanges and 7 → 5 parquet
     # scans, and the sizes pass over the shingle set runs exactly once
-    # (scripts/inc_lab.py: parity OK on all variants, best-of-4 fused
+    # (interleaved A/B, r13: parity OK on all variants, best-of-4 fused
     # 1.054 / pinned 1.120 / per-side 1.163 s — locally noise-level,
     # structurally one full-set pass instead of two).
     sizes_all = sh_all.groupBy("doc_id").agg(

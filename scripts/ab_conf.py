@@ -1,10 +1,19 @@
-"""Interleaved A/B of arbitrary SQL-conf variants over the bench query
-set — the ab_floor.py harness generalized (r13). One session, variants
-alternated per run so host steal bursts hit both roughly equally;
-best-of-N per (query, variant).
+r"""Interleaved A/B of arbitrary SQL-conf variants over registered
+queries. One session, variants alternated per run so host steal bursts
+hit both roughly equally; best-of-N per (query, variant). A query tagged
+``bench`` is timed by its save alone; any other is timed as fn() + save
+(bench.py's ``bench_wall`` rule: driver-loop queries run jobs in fn()).
 
 Run: python scripts/ab_conf.py "label1:key=val,key=val" "label2:key=val" ...
-Env: AB_RUNS (default 3), AB_QUERIES (comma-sep subset), SPARK_GRAFT_SF_DIR.
+Env: AB_RUNS (default 3), AB_QUERIES (comma-sep registered names; default
+the bench set), SPARK_GRAFT_SF_DIR.
+
+Recipes:
+  AQE coalesce floor:  ab_conf.py \
+    "1m:spark.sql.adaptive.coalescePartitions.minPartitionSize=1m" \
+    "64k:spark.sql.adaptive.coalescePartitions.minPartitionSize=64k" \
+    "16k:spark.sql.adaptive.coalescePartitions.minPartitionSize=16k"
+  Best-of-N wall of named queries:  AB_QUERIES=a,b AB_RUNS=N ab_conf.py base:
 """
 
 from __future__ import annotations
@@ -47,15 +56,14 @@ def main() -> int:
     }
 
     specs = registry.all_specs()
-    bench = {
-        n: s
-        for n, s in sorted(specs.items())
-        if ("bench" in s.tags or "bench_wall" in s.tags)
-        and (only_set is None or n in only_set)
-    }
+    if only_set is None:
+        only_set = {
+            n for n, s in specs.items() if "bench" in s.tags or "bench_wall" in s.tags
+        }
     best: dict[tuple[str, str], float] = {}
-    for name, spec in bench.items():
-        wall = "bench_wall" in spec.tags
+    for name in sorted(only_set):
+        spec = specs[name]
+        wall = "bench" not in spec.tags
         for _ in range(runs):
             for label, kv in variants:
                 for k in baseline:

@@ -306,13 +306,6 @@ def test_q19_predicate_decomposition(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_q15_single_aggregation_of_revenue(spark, sf_dir):
-    plan = physical_plan(spark, sf_dir, "q15_top_supplier")
-    # scalar MAX consumed via broadcast, never a second shuffle of revenue
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_contamination_benchmark_side_broadcast(spark, sf_dir):
     """The benchmark shingle set must be the broadcast side — the corpus
     side streaming through a BroadcastHashJoin with no shuffle before it
@@ -335,19 +328,6 @@ def test_pack_offsets_broadcast_join(spark, sf_dir):
     # aggregate: every Window node above the broadcast join input must
     # follow a HashAggregate in the same subtree
     assert "Window" in plan
-
-
-def test_centroid_outliers_broadcast_scoring(spark, sf_dir):
-    """Centroids (|labels|·D cells) broadcast back; the corpus scoring
-    pass must not shuffle the embeddings table."""
-    plan = physical_plan(spark, sf_dir, "emb_centroid_outliers")
-    assert "BroadcastHashJoin" in plan
-
-
-def test_mixture_weights_broadcast_rates(spark, sf_dir):
-    plan = physical_plan(spark, sf_dir, "sample_mixture_weights")
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_merge_upsert_no_cartesian_broadcast_anti(spark, sf_dir):

@@ -166,7 +166,7 @@ def test_incremental_sizes_agg_is_pinned(spark, sf_dir):
     """r13 (VERDICT r12 item 2): the fused set-sizes aggregate must be
     PINNED — without the pin the two branch filters duplicate the whole
     full-shingle-set aggregate subtree and no ReusedExchange ever fires
-    (scripts/inc_lab.py, executed adaptive plans). With the pin the
+    (measured on the executed adaptive plans). With the pin the
     consumer plan reads the sizes from one materialized leaf: the fused
     max(_is_batch) aggregate disappears from the final plan entirely
     (it runs once, inside the checkpoint lineage) and an ExistingRDD
