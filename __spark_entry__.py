@@ -3,7 +3,8 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash → CORRECTNESS_r{N}.json). ``queries()``
+lists the claims queries first, then the rest in registration order.
 
 All real content lives in ``insurance_claim_data_pipeline_spark.registry``;
 this file is a thin adapter so the registry is the single source of truth

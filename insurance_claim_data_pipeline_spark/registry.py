@@ -5,6 +5,10 @@ driver contract (``__spark_entry__.py``) and the parity test-suite both
 consume this one registry, so "implemented" and "oracle-checked" cannot
 drift apart.
 
+Order: ``all_specs()``, ``queries()`` and ``oracle_sql()`` list the
+claims queries first, then the rest in registration order, module by
+module as ``_QUERY_MODULES`` lists them (not in import order).
+
 Cross-engine determinism rules (learned empirically, enforced by
 ``tests/test_oracle_parity.py``):
 
@@ -42,8 +46,10 @@ class QuerySpec:
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
-# Modules whose import registers their queries.
+# Modules whose import registers their queries, in listing order. The
+# claims module comes first and imports no operator module.
 _QUERY_MODULES = (
+    "insurance_claim_data_pipeline_spark.plans.claim_queries",
     "insurance_claim_data_pipeline_spark.operators.relational",
     "insurance_claim_data_pipeline_spark.operators.advanced",
     "insurance_claim_data_pipeline_spark.operators.dedup",
@@ -66,7 +72,6 @@ _QUERY_MODULES = (
     "insurance_claim_data_pipeline_spark.operators.stats",
     "insurance_claim_data_pipeline_spark.operators.maintenance",
     "insurance_claim_data_pipeline_spark.operators.privacy",
-    "insurance_claim_data_pipeline_spark.plans.claim_queries",
     "insurance_claim_data_pipeline_spark.streaming.events_stream",
     "insurance_claim_data_pipeline_spark.streaming.sinks",
     "insurance_claim_data_pipeline_spark.streaming.stateful",
@@ -94,434 +99,12 @@ def _load_modules() -> None:
         importlib.import_module(mod)
 
 
-# Driver-visibility ordering. The external driver consumes queries() in
-# dict order and (round 1, empirically) checked exactly the first 50
-# entries before cutting off. Emission order is therefore a scheduling
-# decision: queries whose correctness the round artifact has NOT yet
-# proven run first — the claims reference port above all — and queries
-# already hash-proven green in a prior round's CORRECTNESS_r*.json are
-# re-listed afterwards, most informative first (TPC-H headliners, dedup,
-# ANN) with simple scalar-function checks last. Names absent from both
-# lists (newly added operators) slot in right after the unproven block,
-# so a new query is always driver-visible before an old green one.
-_FRONT = (
-    # Round-13 window (steady-state staleness rotation; driver checks
-    # the FIRST 50 queries() entries). Composition per the r12 VERDICT
-    # item 1 + the changed-plan re-ride rule: claims re-anchors, then
-    # EVERY r12/r13-touched path with no post-change driver hash —
-    # the r12 set staged before its optimizer ran (dedup_incremental,
-    # the semantic-LSH family, ngram, simhash) and the r13 changed
-    # plans (VALUES-literal consumers, vec_id pre-repartition family,
-    # adjacency-aware min-label sizing consumers) — then the
-    # oldest-record staleness fill (r03/r04 cohorts).
-    "claims_normalized",
-    "claims_candidates",
-    "claims_exclusion_counts",
-    "claims_by_source",
-    "claims_classify_denial",
-    "dedup_incremental",
-    "dedup_semantic_components_lsh",
-    "dedup_semantic_lsh_recall",
-    "dedup_semantic_lsh_sized_bank",
-    "dedup_semantic_lsh_pruning",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "sim_topk_lsh",
-    "sim_topk_ivf_trained",
-    "sim_topk_pq_trained",
-    "sim_rerank_depth_sweep",
-    "events_attribution_shapley",
-    "join_range_bands",
-    "sim_prf_query_expansion",
-    "text_bpe_train_merges",
-    "text_bpe_apply_fertility",
-    "dedup_components",
-    "dedup_components_star",
-    "dedup_cluster_sizes",
-    "dedup_token_yield",
-    "dedup_apply_representatives",
-    "graph_components_modularity",
-    "events_linear_trend",
-    "drift_psi_orders",
-    "orders_cohort_ltv",
-    "lineitem_pareto_abc",
-    "multimodal_binaryfile_ingest",
-    "multimodal_header_parse",
-    "graph_pagerank",
-    "profile_documents",
-    "pack_concat_chunks",
-    "events_ema_irregular",
-    "events_errors_foreachbatch",
-    "events_user_totals",
-    "events_lastk_types",
-    "sort_range_partitioned",
-    "sort_zorder_interleave",
-    "join_asof_nearest",
-    "scalar_struct_funcs",
-    "scalar_null_funcs",
-    "scalar_bitwise_funcs",
-    "sample_reservoir_stratified",
-    "sample_temporal_split",
-    "sample_systematic_weighted",
-    "dedup_exact_normalized",
-    # ---- exactly 50 entries. ----
-)
-_TAIL = (
-    # Demoted r12-window entries first (freshest green records),
-    # then the prior tail minus this round's promotions.
-    "feat_scale_numeric",
-    "stats_power_mde",
-    "stats_cuped_adjustment",
-    "stats_paired_ttest",
-    "dedup_weighted_jaccard",
-    "q6_forecast_revenue",
-    "q10_returned_items",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_counts",
-    "q17_small_quantity",
-    "q19_discounted_revenue",
-    "q2_min_cost_supplier",
-    "q9_product_profit",
-    "q11_important_stock",
-    "q12_shipping_priority_classes",
-    "q20_promotion_suppliers",
-    "q21_waiting_suppliers",
-    "q22_idle_customers",
-    "agg_weighted_median_pandas",
-    "agg_argminmax",
-    "sample_split_hash",
-    "sample_stratified_lang",
-    "split_leakage_safe",
-    "sample_mixture_weights",
-    "emb_pq_encode",
-    "sim_topk_pq",
-    "text_tfidf_topk",
-    "text_boilerplate_ngrams",
-    "text_quality_quantile",
-    "text_pii_redact",
-    "text_repetition_filter",
-    "text_contamination",
-    "text_bigram_logprob",
-    "text_bm25_topk",
-    "events_json_extract",
-    "events_conversion_join",
-    "events_autocorrelation",
-    "dedup_embedding_cosine",
-    "text_token_stats",
-    "window_distribution_funcs",
-    "agg_collect_list",
-    "join_fuzzy_levenshtein",
-    "unpivot_metrics",
-    "dedup_containment_ngram",
-    "sample_bernoulli_hash",
-    "emb_quantize_int8",
-    "emb_l2_normalize",
-    "text_quality_score",
-    "text_langid",
-    "text_fingerprint",
-    "text_chunk_overlap",
-    "events_tumbling_window",
-    "events_sliding_window",
-    "events_sessionize",
-    "events_session_window_native",
-    "events_hypertable_rollup",
-    "events_error_rate",
-    "events_retention_cohorts",
-    "events_rolling_distinct_users",
-    "events_gap_fill_locf",
-    "agg_histogram",
-    "events_anomaly_zscore",
-    "events_dwell_time",
-    "events_markov_transitions",
-    "basket_association_rules",
-    "llm_prep_pipeline",
-    "multimodal_decode_metadata",
-    "multimodal_frame_sample",
-    "dq_violations",
-    "warehouse_merge_upsert",
-    "warehouse_scd2_history",
-    "warehouse_incremental_agg",
-    "events_enriched_purchases",
-    "events_cdc_upsert_stream",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "graph_link_prediction_topq",
-    "graph_link_prediction",
-    "graph_triangle_copurchase",
-    "sim_topk_ivf",
-    "text_jsd_split_shift",
-    "stats_mann_whitney",
-    "graph_kcore",
-    "orders_rfm_segmentation",
-    "orders_rfm_segmentation_dist",
-    "events_funnel_steps",
-    "agg_stats",
-    "agg_rollup",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_approx",
-    "pivot_priority_counts",
-    "join_broadcast_inner",
-    "join_left_semi",
-    "join_left_anti",
-    "join_full_outer",
-    "window_order_stats",
-    "window_rank_functions",
-    "sort_topk_global",
-    "sort_percentiles",
-    "distinct_pairs",
-    "setop_intersect",
-    "setop_except",
-    "setop_union_distinct",
-    "scalar_string_funcs",
-    "scalar_date_funcs",
-    "scalar_math_funcs",
-    "join_asof_last_error",
-    "join_right_outer",
-    "scalar_array_funcs",
-    "scalar_map_funcs",
-    "subquery_scalar",
-    "subquery_correlated",
-    "setop_union_all",
-    "explode_token_freq",
-    "agg_salted_two_stage",
-    "window_range_frame",
-    "sort_hilbert_interleave",
-    "join_asof_interpolate",
-    "sort_exact_median_twopass",
-    "sample_negative_pairs",
-    "sample_ht_estimator",
-    "lineitem_abc_xyz",
-    "lineitem_price_index",
-    "lineitem_fulfillment_lag",
-    "sink_partitioned_parquet_stats",
-    "sink_csv_roundtrip",
-    "profile_embeddings",
-    "dq_fk_discovery",
-    "warehouse_forget_cascade",
-    "warehouse_table_fingerprint",
-    "sink_shard_manifest",
-    "pack_balanced_shards",
-    "profile_join_skew_planner",
-    "agg_winsorized_mean",
-    "stats_fixed_effects_ols",
-    "stats_overdispersion_screen",
-    "stats_theil_sen_slope",
-    "stats_two_proportion_ztest",
-    "sink_vacuum_plan",
-    "claims_candidates_streaming",
-    "events_conversion_streaming",
-    "events_cusum_streaming",
-    "events_dedup_streaming",
-    "events_ema_streaming",
-    "events_enrich_streaming",
-    "events_kalman_streaming",
-    "events_session_window_streaming",
-    "events_tumbling_window_streaming",
-    "events_user_totals_stateful_streaming",
-    "events_watermark_drop_streaming",
-    "emb_kmeans_lloyd_step",
-    "emb_centroid_outliers",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q4_order_priority",
-    "q18_large_orders",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "sim_topk_bruteforce",
-    "window_topk_per_group",
-    "stats_benford_screen",
-    "stats_tost_equivalence",
-    "events_watermark_lateness",
-    "events_watermark_finalized",
-    "events_cap_per_key",
-    "events_hourly_entropy",
-    "events_rolling_median",
-    "events_error_budget_burn",
-    "events_dow_hour_heatmap",
-    "events_bot_screen",
-    "events_cep_pattern",
-    "events_periodogram",
-    "events_peak_detection",
-    "events_interval_coverage",
-    "events_attribution_last_touch",
-    "events_survival_km",
-    "events_markov_entropy_rate",
-    "events_growth_accounting",
-    "events_ljung_box",
-    "events_trigram_paths",
-    "events_retention_decay_fit",
-    "events_metric_tree",
-    "events_stickiness_ratio",
-    "events_attribution_ushape",
-    "events_m4_downsample",
-    "events_holt_linear",
-    "events_forecast_backtest",
-    "events_kl_drift",
-    "events_burstiness",
-    "events_outlier_mad",
-    "graph_degree_distribution",
-    "graph_item_cf_topk",
-    "graph_edge_churn",
-    "graph_assortativity",
-    "graph_pointer_jump_rollup",
-    "graph_label_propagation",
-    "orders_open_concurrency",
-    "orders_gini_concentration",
-    "orders_quintile_migration",
-    "orders_interpurchase_time",
-    "orders_month_seasonality",
-    "orders_backlog_aging",
-    "sink_skipping_stats",
-    "source_schema_evolution",
-    "text_rake_keywords",
-    "text_pmi_bigrams",
-    "text_zipf_fit",
-    "text_heaps_fit",
-    "text_tokenizer_fertility",
-    "text_simpson_diversity",
-    "text_lexical_sophistication",
-    "text_char_entropy_rate",
-    "text_langid_confusion",
-    "text_ctfidf_topk",
-    "text_kneser_ney_bigrams",
-    "text_watermark_detect",
-    "text_dsir_importance",
-    "text_block_dedup",
-    "text_quality_hashclf",
-    "text_train_novelty",
-    "dedup_cdc_chunks",
-    "dedup_prefix_cluster",
-    "emb_pca_project",
-    "emb_knn_eval",
-    "emb_centroid_drift",
-    "emb_farthest_point_seeds",
-    "emb_isotropy_score",
-    "sim_topk_l2",
-    "sim_ivf_nprobe_sweep",
-    "multimodal_audio_framing",
-    "multimodal_phash_buckets",
-    "multimodal_shot_boundaries",
-    "multimodal_patch_layout",
-    "multimodal_audio_vad",
-    "stats_corr_matrix",
-    "stats_skew_kurtosis",
-    "claims_pseudonymize",
-    "sim_ivf_recall_eval",
-    "sim_topk_pq_rerank",
-    "emb_pq_distortion",
-    "dedup_minhash_eval",
-    "mlfeat_decision_stump",
-    "mlfeat_gbm_rounds",
-    "text_naive_bayes",
-    "agg_ddsketch_quantiles",
-    "agg_countmin_deterministic",
-    "agg_kmv_distinct",
-    "agg_kmv_intersection",
-    "agg_bitmap_distinct",
-    "profile_ndv_hll",
-    "sink_bloom_index_stats",
-    "agg_hll_deterministic",
-    "join_bloom_prefilter",
-    "join_skew_salted",
-    "feat_drift_psi",
-    "feat_target_encode_cv",
-    "feat_calibration_ece",
-    "feat_categorical_encode",
-    "feat_target_encode",
-    "feat_hashing_vectorize",
-    "feat_hashed_crosses",
-    "stats_chi2_independence",
-    "stats_diff_in_diff",
-    "stats_srm_check",
-    "stats_anova_oneway",
-    "stats_ols_normal_equations",
-    "stats_logistic_newton",
-    "drift_wasserstein_orders",
-    "stats_sprt_sequential",
-    "events_kalman_filter",
-    "warehouse_snapshot_diff",
-    "warehouse_asof_snapshot",
-    "warehouse_deletion_vectors",
-    "warehouse_clustering_depth",
-    "sink_compaction_plan",
-    "sink_orc_roundtrip",
-    "feature_prep_pipeline",
-    "curation_prep_pipeline",
-    "text_lm_crossval",
-    "dedup_semantic_components",
-    "sim_topk_ivfpq",
-    "sim_topk_ivfpq_rerank",
-    "text_span_dedup",
-    "events_pit_features",
-    "drift_ks_twosample",
-    "join_interval_overlap",
-    "sim_topk_mmr",
-    "feat_woe_iv",
-    "feat_quantile_bin",
-    "agg_bootstrap_ci",
-    "sink_bucketed_join_roundtrip",
-    "stats_perm_test_bh",
-    "stats_spearman_corr",
-    "stats_brown_forsythe",
-    "stats_lift_bootstrap_ci",
-    "stats_welch_ttest",
-    "privacy_k_anonymity",
-    "privacy_l_diversity",
-    "privacy_t_closeness",
-    "privacy_dp_counts",
-    "sim_topk_binary_hamming",
-    "sim_topk_rrf_fusion",
-    "sim_ndcg_eval",
-    "emb_matryoshka_eval",
-    "events_holt_winters",
-    "lineitem_croston_demand",
-    "events_forecast_ensemble",
-    "events_cusum_alarm",
-    "text_perplexity_buckets",
-    "pack_curriculum_chunks",
-    "sample_temperature_mixture",
-    "claims_dq_report",
-    "er_blocking_budget",
-    "text_inverted_index",
-    "text_rolling_fingerprint",
-    "lineitem_pareto_abc_dist",
-    "agg_equidepth_histogram",
-    "events_changepoint_meanshift",
-    "events_seasonal_decompose",
-    "events_lttb_downsample",
-    "rag_prep_pipeline",
-    "multimodal_resize",
-    "multimodal_feature_extract",
-    "warehouse_pit_join",
-    "text_quality_threshold_approx",
-    "events_rolling_distinct_users_approx",
-    "events_dwell_time_approx",
-    "profile_documents_approx",
-    "emb_random_projection",
-    "emb_pca_power_iteration",
-    "emb_gram_matrix",
-    "text_token_entropy",
-    "text_compression_ratio",
-    "text_bpe_pretokenize",
-    "text_vocab_coverage",
-)
-
-
-def _emission_order(names) -> list[str]:
-    front = [n for n in _FRONT if n in names]
-    tail = [n for n in _TAIL if n in names]
-    listed = set(front) | set(tail)
-    new = [n for n in names if n not in listed]  # registration order
-    return front + new + tail
-
-
 def all_specs() -> dict[str, QuerySpec]:
     _load_modules()
-    return {name: _REGISTRY[name] for name in _emission_order(list(_REGISTRY))}
+    # A direct operator import registers early; restore module order.
+    rank = {mod: i for i, mod in enumerate(_QUERY_MODULES)}
+    specs = sorted(_REGISTRY.values(), key=lambda spec: rank[spec.fn.__module__])
+    return {spec.name: spec for spec in specs}
 
 
 def queries() -> dict[str, QueryFn]:

@@ -129,11 +129,14 @@ def table_scans(df) -> dict[str, int]:
 
 
 def build(spark, name: str):
-    # A query that caches a frame leaves it in the session, and a later
-    # plan over the same fragment then reads the cache, not the table:
-    # clear it so each line depends on its own query alone.
-    spark.catalog.clearCache()
-    return SPECS[name].fn(spark, SF_SMOKE)
+    df = SPECS[name].fn(spark, SF_SMOKE)
+    # A cached frame would stay in the session, and a later plan over
+    # the same fragment would read the cache, not the table: every line
+    # must depend on its own query alone, so no query may cache.
+    if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+        spark.catalog.clearCache()  # so the next query is not blamed too
+        pytest.fail(f"{name} left a frame in the SQL cache")
+    return df
 
 
 def budget_line(name: str, df) -> str:

@@ -1,22 +1,37 @@
-"""Registry emission-order contract.
+"""Registry order and tally contract.
 
-The external driver consumes ``queries()`` in dict order and, round 1,
-checked only a prefix of it (cut at 50 entries).  The registry therefore
-guarantees a deterministic priority order: unproven queries first
-(claims port on top), prior-round-green queries re-listed afterwards.
-These tests keep the ordering lists honest as operators are added.
+``queries()`` lists the claims queries first, then the rest in
+registration order (module by module, as ``registry._QUERY_MODULES``
+lists them), however the modules were first imported. The documented
+registry tallies must match the live registry.
 """
 
+import __spark_entry__
 from insurance_claim_data_pipeline_spark import registry
 
+# The batch claims queries in their claim_queries.py order.
+CLAIMS_BATCH = [
+    "claims_normalized",
+    "claims_candidates",
+    "claims_exclusion_counts",
+    "claims_by_source",
+    "claims_classify_denial",
+    "claims_dq_report",
+    "claims_pseudonymize",
+]
 
-def test_order_lists_have_no_stale_or_duplicate_names():
-    specs = registry.all_specs()
-    for lst in (registry._FRONT, registry._TAIL):
-        assert len(lst) == len(set(lst)), "duplicate name in ordering list"
-        stale = set(lst) - set(specs)
-        assert not stale, f"ordering list names not in registry: {stale}"
-    assert not set(registry._FRONT) & set(registry._TAIL)
+
+def test_queries_list_claims_first_then_registration_order(monkeypatch):
+    names = list(__spark_entry__.queries())
+    assert names[: len(CLAIMS_BATCH)] == CLAIMS_BATCH
+    assert names == list(registry.all_specs())
+    # A process that imports an operator module before the registry
+    # loads (the driver's entry() imports relational) registers that
+    # module's queries first; the order must not follow.
+    relational = "insurance_claim_data_pipeline_spark.operators.relational"
+    early = sorted(registry._REGISTRY.items(), key=lambda kv: kv[1].fn.__module__ != relational)
+    monkeypatch.setattr(registry, "_REGISTRY", dict(early))
+    assert list(__spark_entry__.queries()) == names
 
 
 def test_emission_covers_every_registered_query_exactly_once():
@@ -27,52 +42,6 @@ def test_emission_covers_every_registered_query_exactly_once():
     # oracle_sql is a subset with the same relative order
     osql = list(registry.oracle_sql())
     assert [n for n in names if n in set(osql)] == osql
-
-
-def test_driver_window_policy():
-    # Rotation policy, enforced from the artifacts rather than a
-    # hard-coded round: the claims-port re-anchor leads every window
-    # (the driver regenerates testdata per round), _FRONT is exactly
-    # the 50-entry driver window, every _FRONT entry precedes every
-    # _TAIL entry, and the window spends most of its budget on
-    # first-ever driver rows (VERDICT r04 item 1: ≥43/50 while the
-    # never-checked backlog exists).
-    import glob
-    import json
-    import os
-
-    specs = registry.all_specs()
-    names = list(specs)
-    assert names[:5] == [
-        "claims_normalized",
-        "claims_candidates",
-        "claims_exclusion_counts",
-        "claims_by_source",
-        "claims_classify_denial",
-    ]
-    assert len(registry._FRONT) == 50
-    assert list(names[:50]) == list(registry._FRONT)
-    first_tail = min(names.index(n) for n in registry._TAIL if n in names)
-    last_front = max(names.index(n) for n in registry._FRONT if n in names)
-    assert last_front < first_tail, "a prior-green query precedes an unproven one"
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    checked: set[str] = set()
-    for f in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        checked |= set(json.load(open(f)))
-    backlog = [n for n in names if n not in checked]
-    first_ever_in_window = [n for n in names[:50] if n not in checked]
-    if len(backlog) > len(first_ever_in_window):
-        assert len(first_ever_in_window) >= 43, (
-            f"window spends only {len(first_ever_in_window)}/50 on the "
-            f"{len(backlog)}-entry never-checked backlog"
-        )
-
-
-def test_new_queries_slot_before_prior_green_tail():
-    # A name in neither list must land after _FRONT and before _TAIL.
-    order = registry._emission_order(["zz_new_query", *registry._FRONT, *registry._TAIL])
-    idx = order.index("zz_new_query")
-    assert idx == len(registry._FRONT)
 
 
 def test_doc_tallies_current():
