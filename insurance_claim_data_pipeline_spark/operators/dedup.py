@@ -22,9 +22,10 @@ shuffle on (hash/band) keys; candidate pair sets are output-bounded.
 The inverted-index Jaccard join shuffles shingle rows once; hot shingles
 (stop-phrases) are the skew risk — mitigated by AQE skew-join splitting
 and by the implemented document-frequency cap
-(:func:`ngram_jaccard_pairs` ``max_df``), which drops top-frequency
+(:func:`shingle_overlap` ``max_df``), which drops top-frequency
 shingles from the index before the self-join — standard practice for
-production corpora.
+production corpora. Every shingle-overlap operator (set, containment,
+incremental and weighted Jaccard) shares that one candidate stage.
 """
 
 from __future__ import annotations
@@ -93,6 +94,63 @@ JACCARD_THRESHOLD = 0.5
 # and is the exact-dedup pass's job, not the near-dup scorer's.
 NGRAM_MAX_DF = 256
 
+
+def shingle_keys(doc: DataFrame) -> DataFrame:
+    """``(doc_id, sh_key)``: each doc's distinct 5-token shingles as
+    64-bit ``xxhash64`` keys. Hashed BEFORE the per-doc distinct, so the
+    dedup shuffle moves 16-byte rows instead of (long, ~40-byte string).
+    The oracles key on raw strings, so parity assumes no collision over
+    the shingle set (P ≈ n²/2⁶⁵, ~3e-7 at 1e9 distinct shingles): one
+    would merge two shingles, shrinking a set size or inflating an
+    overlap. Check for that before suspecting the plan on a mismatch."""
+    return (
+        shingle_rows(doc, distinct=False)
+        .select("doc_id", F.xxhash64("shingle").alias("sh_key"))
+        .distinct()
+    )
+
+
+def shingle_overlap(
+    index: DataFrame, probe: DataFrame | None = None, max_df: int = NGRAM_MAX_DF
+) -> DataFrame:
+    """The shingle near-dup family's one candidate stage: keyed rows
+    ``(doc_id, sh_key[, c])``, one per (doc, key) → ``(doc_a, doc_b,
+    n_common)``; callers keep only their scoring.
+
+    - ``max_df`` is the hot-shingle skew guard: keys in more than
+      ``max_df`` ``index`` docs (stop-phrases, boilerplate) leave BOTH
+      sides before the join. A key with df=d alone yields d·(d-1)/2 rows
+      through one shuffle key; AQE skew splitting spreads that work,
+      the cap bounds it. Callers size docs over ALL their shingles, so
+      surviving pairs score exactly and pairs sharing ONLY hot keys drop.
+    - No ``probe``: the index joins itself on ``doc_a < doc_b``. With a
+      ``probe``, ``doc_a`` is the probe doc and ``doc_b`` the index doc.
+    - With a count column ``c``, ``n_common`` is Σ least(cₐ, c_b);
+      otherwise it counts the shared keys."""
+    hot = (
+        index.groupBy("sh_key")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > max_df)
+        .select("sh_key")
+    )
+    # hot-key set is tiny by construction → broadcast anti-join
+    idx = index.join(F.broadcast(hot), "sh_key", "left_anti")
+    on = F.col("a.sh_key") == F.col("b.sh_key")
+    if probe is None:
+        a = idx
+        on = on & (F.col("a.doc_id") < F.col("b.doc_id"))
+    else:
+        # the join would drop hot probe rows too, but only after shuffling them
+        a = probe.join(F.broadcast(hot), "sh_key", "left_anti")
+    n = F.sum(F.least("a.c", "b.c")) if "c" in index.columns else F.count(F.lit(1))
+    return (
+        a.alias("a")
+        .join(idx.alias("b"), on)
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(n.alias("n_common"))
+    )
+
+
 NGRAM_JACCARD_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id, string_split(text, ' ') AS toks FROM documents
@@ -119,50 +177,13 @@ WHERE CAST(n_common AS DOUBLE) / CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= {JA
 """
 
 
-def ngram_jaccard_pairs(doc: DataFrame, max_df: int | None = None) -> DataFrame:
+def ngram_jaccard_pairs(doc: DataFrame, max_df: int = NGRAM_MAX_DF) -> DataFrame:
     """Core of dedup_ngram_jaccard over an arbitrary ``(doc_id, text)``
-    frame.
-
-    ``max_df`` is the hot-shingle skew guard: shingles occurring in more
-    than ``max_df`` documents (stop-phrases, boilerplate) are dropped
-    from the inverted index BEFORE the self-join. A shingle with df=d
-    alone produces d·(d-1)/2 candidate rows through one shuffle key — at
-    corpus scale a single boilerplate sentence is a quadratic hot key,
-    and AQE skew-splitting only spreads the work, it doesn't shrink it.
-    The cap bounds per-key fan-out at max_df²/2 and is standard practice
-    (equivalent to stop-word removal for MinHash corpora). Set sizes are
-    still computed over ALL shingles, so for pairs whose common shingles
-    survive the cap the Jaccard is exact; pairs sharing ONLY hot
-    shingles are not near-dups in any useful sense and are dropped."""
-    # hash BEFORE the per-doc distinct: the dedup shuffle then moves
-    # 16-byte (long, long) rows instead of (long, ~40-byte string) —
-    # ~60% less shuffle volume for the biggest shuffle in the plan.
-    # Cost: a same-doc 64-bit collision would undercount that doc's set
-    # size by 1 (~shingles²/2^64 per doc — immaterial to a ratio over
-    # ~10³ shingles, and the string-keyed oracle parity guards it).
-    sh = (
-        shingle_rows(doc, distinct=False)
-        .select("doc_id", F.xxhash64("shingle").alias("sh_key"))
-        .distinct()
-    )
+    frame: set Jaccard over the :func:`shingle_overlap` candidates
+    (``max_df`` is its hot-shingle cap)."""
+    sh = shingle_keys(doc)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    idx = sh
-    if max_df is not None:
-        hot = (
-            sh.groupBy("sh_key")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("sh_key")
-        )
-        # hot-key set is tiny by construction → broadcast anti-join
-        idx = sh.join(F.broadcast(hot), "sh_key", "left_anti")
-    a = idx.alias("a")
-    b = idx.alias("b")
-    cand = (
-        a.join(b, (F.col("a.sh_key") == F.col("b.sh_key")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    cand = shingle_overlap(sh, max_df=max_df)
     sa = sizes.alias("sa")
     sb = sizes.alias("sb")
     jac = F.col("n_common").cast("double") / (
@@ -181,17 +202,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 5-token-shingle Jaccard near-dup pairs. Candidates come from
     an inverted-index self-join (pairs sharing ≥1 shingle) — candidate
     count is data-bounded, not O(n²). The self-join keys on
-    xxhash64(shingle) (8 bytes) rather than the ~40-byte shingle string:
-    ~5× less shuffle volume, same result (a 64-bit collision between
-    distinct shingles in the same corpus is ~2^-64·pairs — negligible;
-    the oracle joins on the raw string, so parity itself guards this).
+    xxhash64(shingle) (8 bytes, :func:`shingle_keys`) rather than the
+    ~40-byte shingle string: ~5× less shuffle volume, same result.
     The registered default runs with the :data:`NGRAM_MAX_DF` hot-shingle
     cap APPLIED (r11, skew-lab finding — see the constant's rationale;
     the oracle mirrors the cap, and on the driver corpora, whose max
     shingle df is 4, the capped and uncapped outputs are identical)."""
-    return ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), max_df=NGRAM_MAX_DF
-    )
+    return ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -704,20 +721,15 @@ def min_label_components(pairs: DataFrame) -> DataFrame:
     # signature already accepts). prev=None forces the first round.
     prev = None
     converged = False
-    # Per-round shuffle sizing from the observed counts (the r12 rule,
-    # adjacency-aware since r13): round 1 runs at the session default
-    # (no observed label count yet), later rounds at the LARGER of the
-    # label count and the fixed adjacency count — the round's join
-    # shuffles both frames. Restored in the finally.
+    # Shuffle sizing from the observed adjacency count: each round's
+    # join shuffles the labels frame (V rows) and the adjacency (2E+V
+    # ≥ V rows), so adj_n is the larger side in EVERY round, round 1
+    # included. Restored in the finally.
     spark = pairs.sparkSession
     saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(loop_shuffle_partitions(adj_n)))
         for _ in range(_COMPONENTS_MAX_ROUNDS):
-            if prev is not None:
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions",
-                    str(loop_shuffle_partitions(max(prev[0] or 0, adj_n))),
-                )
             # one job per round, one join + one aggregate: the convergence
             # checksum rides the pin's own materialization job via observe.
             labels, m = pin_eager_observed(
@@ -832,23 +844,19 @@ def dedup_containment_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     CONTAINED side only. The registered default applies the
     :data:`NGRAM_MAX_DF` hot-shingle cap (r11, skew-lab class — same
     rationale and oracle mirror as dedup_ngram_jaccard; inactive on the
-    driver corpora, max df 4)."""
-    doc = load_table(spark, sf_dir, "documents")
-    sh = shingle_rows(doc)
+    driver corpora, max df 4). Overlap is symmetric: each ``a < b`` pair
+    is joined once, then emitted in both directions."""
+    sh = shingle_keys(load_table(spark, sf_dir, "documents"))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    hot = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > NGRAM_MAX_DF)
-        .select("shingle")
-    )
-    sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    a = sh.alias("a")
-    b = sh.alias("b")
-    cand = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") != F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    cand = shingle_overlap(sh).select(
+        F.inline(
+            F.array(
+                F.struct("doc_a", "doc_b", "n_common"),
+                F.struct(
+                    F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"), "n_common"
+                ),
+            )
+        )
     )
     return (
         cand.join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
@@ -916,23 +924,11 @@ WHERE t.bkt >= {INC_CORPUS_PCT}
 """
 
 
-def incremental_dedup_frame(doc: DataFrame, max_df: int | None = None) -> DataFrame:
+def incremental_dedup_frame(doc: DataFrame, max_df: int = NGRAM_MAX_DF) -> DataFrame:
     """Core of dedup_incremental over an arbitrary ``(doc_id, text)``
-    frame. ``max_df`` is the hot-shingle skew guard (same semantics as
-    ngram_jaccard_pairs): shingles whose CORPUS document frequency
-    exceeds the cap are dropped from both index and probe sides before
-    the join — set sizes still count ALL shingles, so surviving
-    matches score exact Jaccard and boilerplate-only pairs drop.
-
-    Equivalence assumption (same as ngram_jaccard_pairs /
-    connected-components): the join key is ``xxhash64(shingle)`` while
-    the oracle joins raw shingle strings, so parity relies on xxhash64
-    being collision-free over the observed shingle set: a 64-bit
-    collision would merge two shingles (shrinking a distinct set size
-    and/or inflating ``n_common``) and shift a Jaccard score. If an
-    oracle mismatch ever appears here, check for that before suspecting
-    the plan. P(any collision) ≈ n²/2⁶⁵: ~3e-7 even at 1e9 distinct
-    shingles."""
+    frame: the batch's shingle keys probe the corpus index through
+    :func:`shingle_overlap`, so ``max_df`` caps on CORPUS document
+    frequency and drops hot keys from both sides."""
     from .sampling import hash_bucket
 
     b = hash_bucket("doc_id")
@@ -944,9 +940,7 @@ def incremental_dedup_frame(doc: DataFrame, max_df: int | None = None) -> DataFr
     # two shuffles). At real scale the corpus index is a materialized
     # table and only the batch side is computed per run.
     sh_all = (
-        shingle_rows(doc, distinct=False)
-        .select("doc_id", F.xxhash64("shingle").alias("sh_key"))
-        .distinct()
+        shingle_keys(doc)
         .withColumn("_is_batch", hash_bucket("doc_id") >= INC_CORPUS_PCT)
         # NOTE: measured A/B at sf0.1 — cutting lineage here with
         # localCheckpoint is ~10% SLOWER than recomputing (block-writing
@@ -984,21 +978,8 @@ def incremental_dedup_frame(doc: DataFrame, max_df: int | None = None) -> DataFr
     bsz = sizes_all.filter(F.col("_is_batch")).select(
         "doc_id", F.col("sz").alias("b_sz")
     )
-    c_idx, b_idx = csh, bsh
-    if max_df is not None:
-        hot = (
-            csh.groupBy("sh_key")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("sh_key")
-        )
-        c_idx = csh.join(F.broadcast(hot), "sh_key", "left_anti")
-        b_idx = bsh.join(F.broadcast(hot), "sh_key", "left_anti")
-    cand = (
-        b_idx.alias("b")
-        .join(c_idx.alias("c"), F.col("b.sh_key") == F.col("c.sh_key"))
-        .groupBy(F.col("b.doc_id").alias("new_id"), F.col("c.doc_id").alias("corpus_id"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    cand = shingle_overlap(csh, probe=bsh, max_df=max_df).select(
+        F.col("doc_a").alias("new_id"), F.col("doc_b").alias("corpus_id"), "n_common"
     )
     jac = F.col("n_common").cast("double") / (
         F.col("b_sz") + F.col("c_sz") - F.col("n_common")
@@ -1057,9 +1038,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpora whose max df is 4, so recorded hashes stand; also tested in
     tests/test_llm_ops.py). Best match = (rounded jaccard DESC,
     corpus_id) — a total order shared with the oracle."""
-    return incremental_dedup_frame(
-        load_table(spark, sf_dir, "documents"), max_df=NGRAM_MAX_DF
-    )
+    return incremental_dedup_frame(load_table(spark, sf_dir, "documents"))
 
 
 APPLY_REPS_ORACLE = f"""
@@ -1171,13 +1150,13 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles, never the all-pairs exact job."""
     doc = load_table(spark, sf_dir, "documents")
     cand = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b", "est_jaccard")
-    sh = shingle_rows(doc).select("doc_id", F.xxhash64("shingle").alias("k"))
+    sh = shingle_keys(doc)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     common = (
         cand.join(sh.withColumnRenamed("doc_id", "doc_a"), "doc_a")
         .join(
-            sh.select(F.col("doc_id").alias("db"), F.col("k").alias("kb")),
-            (F.col("doc_b") == F.col("db")) & (F.col("k") == F.col("kb")),
+            sh.select(F.col("doc_id").alias("db"), F.col("sh_key").alias("kb")),
+            (F.col("doc_b") == F.col("db")) & (F.col("sh_key") == F.col("kb")),
         )
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
@@ -1808,10 +1787,10 @@ def dedup_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σmax = nₐ + n_b − Σmin (multiset identity), so the union weight
     comes free from the per-doc totals.
 
-    Same inverted-index self-join shape as the set variant (pairs
-    sharing ≥1 shingle, keyed on 8-byte xxhash64 shingle keys — the
-    raw-string oracle guards the negligible 64-bit collision risk),
-    but aggregating Σ least(cₐ, c_b) per pair instead of a count.
+    Same :func:`shingle_overlap` candidate stage as the set variant
+    (pairs sharing ≥1 shingle, keyed on 8-byte xxhash64 shingle keys),
+    fed per-doc counts ``c`` so it sums Σ least(cₐ, c_b) per pair
+    instead of counting.
     The registered default applies the :data:`NGRAM_MAX_DF`
     document-frequency cap (r11 skew-lab class: 1.65× wall for 1.00×
     output on the hot-phrase shard uncapped; per-doc multiset totals
@@ -1833,26 +1812,7 @@ def dedup_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
     sizes = cnt.groupBy("doc_id").agg(F.sum("c").alias("n"))
-    hot = (
-        cnt.groupBy("sh_key")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > NGRAM_MAX_DF)
-        .select("sh_key")
-    )
-    idx = cnt.join(F.broadcast(hot), "sh_key", "left_anti")
-    a = idx.alias("a")
-    b = idx.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.sh_key") == F.col("b.sh_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.sum(F.least("a.c", "b.c")).alias("inter_w"))
-    )
+    inter = shingle_overlap(cnt).withColumnRenamed("n_common", "inter_w")
     sa = sizes.alias("sa")
     sb = sizes.alias("sb")
     wj = F.expr("inter_w * 1000000 div (sa.n + sb.n - inter_w)")

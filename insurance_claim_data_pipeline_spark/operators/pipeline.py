@@ -142,11 +142,7 @@ def llm_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_keep = keepq.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
     surv = keepq.join(exact_keep.select("doc_id"), "doc_id")
 
-    # r11: the registered default applies the NGRAM_MAX_DF hot-shingle
-    # cap (oracle mirrored; inactive on driver corpora — max df 4)
-    pairs = ngram_jaccard_pairs(
-        surv.select("doc_id", "text"), max_df=NGRAM_MAX_DF
-    ).select("doc_a", "doc_b")
+    pairs = ngram_jaccard_pairs(surv.select("doc_id", "text")).select("doc_a", "doc_b")
     comp = min_label_components(pairs)
     canon = (
         surv.join(comp, "doc_id", "left")

@@ -218,6 +218,56 @@ def test_ngram_jaccard_max_df_noop_when_cap_above_max_frequency(spark, sf_dir):
     assert base == capped and len(base) > 0
 
 
+# keyed shingle rows (doc_id, sh_key, c): key 100 is in 5 index docs,
+# above the max_df=3 used below; key 300 sits exactly at the cap
+_OVERLAP_INDEX = [
+    (1, 100, 1), (2, 100, 2), (3, 100, 1), (4, 100, 3), (5, 100, 1),
+    (1, 200, 2), (2, 200, 3),
+    (2, 300, 1), (3, 300, 4), (4, 300, 2),
+    (5, 400, 2), (6, 400, 1), (6, 500, 1),
+]
+# key 500 is in 4 probe docs but 1 index doc: df is the index's
+_OVERLAP_PROBE = [
+    (10, 100, 1), (10, 200, 1), (11, 300, 1), (11, 500, 1),
+    (12, 500, 1), (13, 500, 1), (14, 500, 1), (14, 600, 1),
+]
+
+
+def _overlap_reference(index, probe, max_df, weighted):
+    from collections import Counter
+
+    df = Counter(k for _, k, _ in index)
+    out = Counter()
+    for da, ka, ca in index if probe is None else probe:
+        for db, kb, cb in index:
+            if ka == kb and df[ka] <= max_df and (probe is not None or da < db):
+                out[(da, db)] += min(ca, cb) if weighted else 1
+    return dict(out)
+
+
+@pytest.mark.parametrize("mode", ["count", "weighted", "probe"])
+def test_shingle_overlap_matches_bruteforce(spark, mode):
+    """shingle_overlap against a pure-Python overlap on a corpus where
+    the cap engages: the hot key leaves both sides on every path
+    (self-join count, weighted Σ least(cₐ, c_b), and probe), df is
+    counted on the index only, and keys at the cap stay."""
+    from insurance_claim_data_pipeline_spark.operators.dedup import shingle_overlap
+
+    weighted = mode == "weighted"
+    probe = _OVERLAP_PROBE if mode == "probe" else None
+    cols = ["doc_id", "sh_key", "c"] if weighted else ["doc_id", "sh_key"]
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "doc_id long, sh_key long, c long").select(*cols)
+
+    got = shingle_overlap(
+        frame(_OVERLAP_INDEX), probe=None if probe is None else frame(probe), max_df=3
+    )
+    want = _overlap_reference(_OVERLAP_INDEX, probe, 3, weighted)
+    assert want != _overlap_reference(_OVERLAP_INDEX, probe, 10, weighted)
+    assert {(r["doc_a"], r["doc_b"]): r["n_common"] for r in got.collect()} == want
+
+
 def test_ngram_jaccard_max_df_drops_hot_shingle_pairs(spark):
     from insurance_claim_data_pipeline_spark.operators.dedup import ngram_jaccard_pairs
 

@@ -72,13 +72,28 @@ def test_star_loop_restores_shuffle_partitions(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def test_min_label_restores_shuffle_partitions(spark):
+def test_min_label_restores_shuffle_partitions(spark, monkeypatch):
+    """Every propagation round, round 1 included, runs at the partition
+    count sized from the observed adjacency (2E+V rows); the session
+    value comes back afterwards."""
     before = spark.conf.get("spark.sql.shuffle.partitions")
+    seen = []
+    real = dedup.pin_eager_observed
+
+    def spy(*args, **kwargs):
+        seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "pin_eager_observed", spy)
     pairs = spark.createDataFrame([(5, 6), (6, 7)], "doc_a long, doc_b long")
     out = dedup.min_label_components(pairs)
     rows = {(r["doc_id"], r["component_id"]) for r in out.collect()}
     assert rows == {(5, 5), (6, 5), (7, 5)}
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    # seen[0] is the adjacency pin itself (2 edges both ways + 3 self-loops)
+    sized = str(loop_shuffle_partitions(2 * 2 + 3))
+    assert sized != before and len(seen) >= 3
+    assert seen == [before] + [sized] * (len(seen) - 1)
 
 
 def test_sem_lsh_planes_values_literal_exact(spark):
