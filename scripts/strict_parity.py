@@ -12,7 +12,8 @@ so any cross-engine representation drift the type audit could miss
 
 Run: python scripts/strict_parity.py [sf_dir] [name ...]
 (sf_dir defaults to sf0.01; with names given, only those queries run —
-the targeted re-verify loop after a plan change.)
+the targeted re-verify loop after a plan change. A name that is not
+registered or has no oracle exits 2 before Spark starts.)
 """
 
 from __future__ import annotations
@@ -74,15 +75,29 @@ def table_sig(pdf: pd.DataFrame) -> list[tuple]:
     return rows
 
 
+def oracled_specs(names) -> dict:
+    """The registered, oracled specs to check: all of them when ``names``
+    is empty, else exactly ``names``. Raises ``KeyError`` listing every
+    name that is unregistered or has no oracle, so a misspelt name
+    fails instead of checking nothing."""
+    oracled = {n: s for n, s in registry.all_specs().items() if s.oracle is not None}
+    unknown = sorted(set(names) - set(oracled))
+    if unknown:
+        raise KeyError(unknown)
+    return {n: s for n, s in oracled.items() if not names or n in names}
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    try:
+        specs = oracled_specs(set(sys.argv[2:]))
+    except KeyError as e:
+        print(f"unregistered or oracle-less: {' '.join(e.args[0])}", file=sys.stderr)
+        return 2
     spark = get_spark("strict-parity")
     con = duckdb_conn(sf_dir)
     bad = 0
-    for name, spec in registry.all_specs().items():
-        if spec.oracle is None or (only and name not in only):
-            continue
+    for name, spec in specs.items():
         try:
             s = table_sig(spec.fn(spark, sf_dir).toPandas())
             o = table_sig(con.execute(spec.oracle).df())
@@ -97,7 +112,7 @@ def main() -> int:
             diff_o = [r for r in o if r not in ss][:2]
             print(f"STRICT-MISMATCH {name}\n  spark-only: {diff_s}\n  oracle-only: {diff_o}")
     con.close()
-    print(f"done: {bad} strict mismatch(es)")
+    print(f"done: checked {len(specs)}, {bad} strict mismatch(es)")
     return 1 if bad else 0
 
 

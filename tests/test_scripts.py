@@ -39,3 +39,19 @@ def test_docs_name_only_existing_scripts():
             if not os.path.isfile(os.path.join(REPO, path)):
                 missing.append(f"{doc}: {path}")
     assert not missing, missing
+
+
+def test_strict_parity_rejects_unknown_names():
+    spec = importlib.util.spec_from_file_location(
+        "scripts_strict_parity", os.path.join(SCRIPTS, "strict_parity.py")
+    )
+    strict_parity = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(strict_parity)
+
+    with pytest.raises(KeyError, match="dedup_ngram_jacard"):
+        strict_parity.oracled_specs({"dedup_ngram_jaccard", "dedup_ngram_jacard"})
+    with pytest.raises(KeyError, match="agg_approx"):  # registered, no oracle
+        strict_parity.oracled_specs({"agg_approx"})
+    assert list(strict_parity.oracled_specs({"dedup_ngram_jaccard"})) == [
+        "dedup_ngram_jaccard"
+    ]

@@ -10,8 +10,8 @@ same pins through ``DataFrame.checkpoint`` (checkpoint-dir blocks,
 recoverable) for real multi-executor deployments.
 
 Also here: the session conf block get_spark and configure share, the
-Tungsten page size get_spark sets, and the one conf error load_table
-tolerates.
+Tungsten page size and call-site-capture switch get_spark sets, and
+the one conf error load_table tolerates.
 """
 
 from __future__ import annotations
@@ -214,6 +214,25 @@ def test_tungsten_pages_are_small_and_address_the_heap(spark):
     page = jvm.org.apache.spark.SparkEnv.get().memoryManager().pageSizeBytes()
     assert page <= 4 * 1024 * 1024
     assert 8192 * page >= jvm.java.lang.Runtime.getRuntime().maxMemory()
+
+
+def test_dataframe_call_site_capture_is_off(spark, monkeypatch):
+    """get_spark turns off PySpark's per-Column call-site capture, whose
+    py4j round trips run on every F.* call and whose first call imports
+    IPython. It is a static SQL conf, so it is set in the builder only:
+    if it were moved into SESSION_CONFS, configure()'s runtime
+    spark.conf.set would raise and
+    test_session_confs_read_back_after_configure would fail."""
+    import pyspark.errors.utils as errors_utils
+    from pyspark.sql import SparkSession
+
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    # A Column built before any session was active caches False
+    # whatever the conf says; clear the cache so the conf is read.
+    monkeypatch.setattr(errors_utils, "_enable_debugging_cache", None)
+    assert SparkSession.getActiveSession() is not None
+    assert errors_utils.is_debugging_enabled() is False
 
 
 def test_load_table_swallows_only_the_locked_conf_error(spark, monkeypatch):
