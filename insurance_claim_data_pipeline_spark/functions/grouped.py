@@ -27,12 +27,17 @@ group, not one partition.
 Output rows are identical to the ``applyInPandas`` formulation (row
 order within the DataFrame differs, which Spark never guarantees
 anyway), so every DuckDB value-hash oracle is unaffected.
+
+:func:`keyed_fold` is the pandas side of the sequential recurrences
+(EMA, Kalman, CUSUM, Holt, Croston): one fold runs a recurrence per key
+for the batch operator and for its ``applyInPandasWithState`` twin.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Sequence
+from typing import Any, Callable, Sequence
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -107,3 +112,57 @@ def sorted_grouped_map(
 
     part = df.repartition(*key_list).sortWithinPartitions(*key_list)
     return part.mapInPandas(part_fn, schema=schema)
+
+
+def keyed_fold(
+    key: str,
+    order: Sequence[str],
+    inputs: Sequence[str],
+    passthrough: Sequence[str],
+    outputs: Sequence[str],
+    step: Callable[..., tuple],
+) -> Callable[..., tuple[pd.DataFrame, Any]]:
+    """Build ``fold(pdf, state=None) -> (out, end_state)``, which runs
+    the recurrence ``step`` over each ``key`` of ``pdf``.
+
+    ``fold`` groups ``pdf`` by ``key``, orders each key's rows by
+    ``order`` and calls ``step(state, *columns)`` once per key, with
+    that key's ``inputs`` columns as lists in fold order. ``step`` loops over the rows itself
+    and returns ``(end_state, *lists)``, one list per ``outputs``
+    column. Every key starts from ``state``: ``None`` for a new key (the
+    batch operators), the stored ``GroupState`` value when a streaming
+    handler folds one key's micro-batch. ``out`` holds the
+    ``passthrough`` columns and then ``outputs``; ``end_state`` is the
+    last key's. Batch and streaming thus share one definition of each
+    recurrence, so a drained stream emits exactly the batch answer.
+
+    ``step`` must be a closure, like every function handed to a worker:
+    cloudpickle then ships it by value, and Python workers need not
+    import this package (the driver contract runs from an arbitrary cwd).
+    """
+    ins, keep, outs = list(inputs), list(passthrough), list(outputs)
+
+    def fold(pdf: pd.DataFrame, state: Any = None) -> tuple[pd.DataFrame, Any]:
+        # NaN-safe key codes: every null key gets code -1, so nulls are
+        # ONE group (SQL PARTITION BY semantics) although NaN != NaN.
+        codes = pd.factorize(pdf[key].to_numpy())[0]
+        # numpy, not DataFrame.sort_values: a streaming handler folds one
+        # small key per call, where pandas' per-call overhead dominated
+        idx = np.lexsort([*(pdf[c].to_numpy() for c in reversed(order)), codes])
+        codes = codes[idx]
+        new = np.empty(len(codes), dtype=bool)
+        new[:1] = True
+        np.not_equal(codes[1:], codes[:-1], out=new[1:])
+        starts = np.flatnonzero(new).tolist()
+        cols = {c: pdf[c].to_numpy()[idx] for c in {*ins, *keep}}
+        lists = [cols[c].tolist() for c in ins]
+        acc: list[list] = [[] for _ in outs]
+        end = state
+        for lo, hi in zip(starts, starts[1:] + [len(idx)]):
+            end, *res = step(state, *[c[lo:hi] for c in lists])
+            for a, r in zip(acc, res):
+                a.extend(r)
+        out = pd.DataFrame({**{c: cols[c] for c in keep}, **dict(zip(outs, acc))})
+        return out, end
+
+    return fold

@@ -239,7 +239,3 @@ def _quantize_sql(expr: str, scale: int, precision: int) -> str:
 
 def dec_sum_sql(expr: str, scale: int = 2, precision: int = 18) -> str:
     return f"CAST(SUM({_quantize_sql(expr, scale, precision)}) AS DOUBLE)"
-
-
-def dec_avg_sql(expr: str, scale: int = 2, precision: int = 18) -> str:
-    return f"CAST(SUM({_quantize_sql(expr, scale, precision)}) AS DOUBLE) / COUNT({expr})"

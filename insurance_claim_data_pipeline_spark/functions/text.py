@@ -1,9 +1,9 @@
 """Text-analysis column expressions over the ``documents`` table —
-tokenization, shingling, md5-based hashing primitives.
+tokenization and shingling.
 
 Everything here is built-in-function composition (split / transform /
-sequence / md5): JVM-side, codegen'd, and — because md5 is standardized —
-bit-identical to the DuckDB oracle mirrors.
+sequence): JVM-side, codegen'd, and bit-identical to the DuckDB oracle
+mirrors.
 """
 
 from __future__ import annotations
@@ -17,10 +17,6 @@ SHINGLE_N = 5  # tokens per shingle for near-dup detection
 def tokens(text: Column | str) -> Column:
     c = F.col(text) if isinstance(text, str) else text
     return F.split(c, " ")
-
-
-def distinct_tokens(text: Column | str) -> Column:
-    return F.array_distinct(tokens(text))
 
 
 def shingles(toks: Column, n: int = SHINGLE_N) -> Column:
@@ -74,12 +70,3 @@ def shingles_sql(toks: str, n: int = SHINGLE_N) -> str:
         f"FOR i IN generate_series(1, len({toks}) - {n - 1})]) "
         f"ELSE [] END"
     )
-
-
-def seeded_md5(seed: int, value: Column) -> Column:
-    """Deterministic per-seed hash family member: md5('<seed>:' || v)."""
-    return F.md5(F.concat(F.lit(f"{seed}:"), value))
-
-
-def seeded_md5_sql(seed: int, value: str) -> str:
-    return f"md5('{seed}:' || {value})"

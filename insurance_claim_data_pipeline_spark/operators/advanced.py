@@ -20,6 +20,8 @@ pass per partition.
 
 from __future__ import annotations
 
+import pandas as pd
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -385,12 +387,10 @@ def agg_weighted_median_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     drivers that never added this repo to the workers' sys.path still
     run it."""
     import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit GROUPED_AGG: `from __future__ import annotations` turns
-    # type hints into strings this module can't resolve for inference
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def wmedian(v, wt):
+    @pandas_udf("double")
+    def wmedian(v: pd.Series, wt: pd.Series) -> float:
         order = np.lexsort((v.to_numpy(),))  # stable sort by value
         vs = v.to_numpy()[order]
         ws = wt.to_numpy()[order]
@@ -399,8 +399,8 @@ def agg_weighted_median_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # grouped-agg pandas UDFs can't mix with JVM aggregates in one agg,
     # so the row count is a second (trivial) pandas aggregate
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def nrows(v):
+    @pandas_udf("long")
+    def nrows(v: pd.Series) -> int:
         return len(v)
 
     li = load_table(spark, sf_dir, "lineitem")

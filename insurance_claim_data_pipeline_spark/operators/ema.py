@@ -30,12 +30,10 @@ diverges; quantities stay far below int64 range (w≤1e6 · x≤5e8).
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.grouped import sorted_grouped_map
+from ..functions.grouped import keyed_fold, sorted_grouped_map
 from ..registry import register
 from ..session import load_table, pin
 
@@ -43,6 +41,16 @@ TAU_US = 3_600_000_000  # 1-hour decay constant
 E6 = 1_000_000
 
 EMA_SCHEMA = "user_id bigint, event_id bigint, ts_us bigint, value double, ema_e6 bigint"
+
+
+# Floor division for the oracles: DuckDB's integer // truncates toward
+# zero while Python's // floors; subtracting the non-negative residue
+# first makes the quotient exact (and floor) in both. Holt's trend and
+# Kalman's innovation go negative, and it keeps the EMA oracle correct
+# should a testdata regen introduce negative values.
+def _floordiv_sql(expr: str, d: int | str) -> str:
+    return f"(({expr}) - (((({expr}) % {d}) + {d}) % {d})) // {d}"
+
 
 EMA_ORACLE = f"""
 WITH RECURSIVE base AS (
@@ -63,67 +71,66 @@ WITH RECURSIVE base AS (
   FROM weighted WHERE rn = 1
   UNION ALL
   SELECT w.user_id, w.event_id, w.ts_us, w.value, w.rn,
-         -- explicit FLOOR division: DuckDB's integer // truncates toward
-         -- zero while Python's // floors; subtracting the non-negative
-         -- residue first makes the quotient exact (and floor) in both,
-         -- so the oracle stays correct even if a future testdata regen
-         -- introduces negative values.
-         (w.w_e6 * w.x_e6 + ({E6} - w.w_e6) * r.ema_e6
-          - ((((w.w_e6 * w.x_e6 + ({E6} - w.w_e6) * r.ema_e6) % {E6}) + {E6}) % {E6}))
-         // {E6}
+         {_floordiv_sql(f"w.w_e6 * w.x_e6 + ({E6} - w.w_e6) * r.ema_e6", E6)}
   FROM weighted w JOIN rec r ON w.user_id = r.user_id AND w.rn = r.rn + 1
 )
 SELECT user_id, event_id, ts_us, value, ema_e6 FROM rec
 """
 
 
-def ema_frame(events: DataFrame) -> DataFrame:
-    tau_us = TAU_US
-    e6 = E6
+def user_values(events: DataFrame) -> DataFrame:
+    """``(user_id, event_id, ts_us, value)``: the measured events the EMA
+    and Kalman recurrences fold, batch and streaming alike. Rows with
+    no measurement carry no state update, so NULL values sit out
+    before the Arrow stage (float(None) would throw in the scan)."""
+    return events.filter(F.col("value").isNotNull()).select(
+        "user_id", "event_id", F.unix_micros("ts").alias("ts_us"), "value"
+    )
 
-    def ema_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Integer fixed-point EMA scan, whole-batch: one sort over many
-        # complete user series, key transitions reset the recurrence.
+
+# Every recurrence below is a closure built inside a function, like the
+# folds that run it: cloudpickle then ships it by value, so Python
+# workers never import this package (see keyed_fold).
+
+
+def ema_fold():
+    """Keyed fold of the ×1e6 EMA per user, in (ts, event_id) order;
+    state ``(last_ts, ema)``."""
+    tau_us, e6 = TAU_US, E6
+
+    def ema(state, ts, value):
         # math.exp, not np.exp — the reproducibility contract is exact
         # equality with the DuckDB oracle and the independent
         # recomputation in tests.
-        # NOTE: defined as a closure, not at module level — cloudpickle
-        # then ships it BY VALUE, so Python workers need neither this
-        # package on their path nor a matching PYTHONPATH (the driver
-        # contract runs from an arbitrary cwd).
         import math
 
-        pdf = pdf.sort_values(["user_id", "ts_us", "event_id"]).reset_index(drop=True)
-        kcol = pdf["user_id"]
-        # NaN-safe boundaries: null users are ONE group (SQL PARTITION
-        # BY semantics), and NaN != NaN must not split them.
-        new_grp = ((kcol != kcol.shift()) & ~(kcol.isna() & kcol.shift().isna())).tolist()
-        new_grp[0] = True
-        ema: list[int] = []
-        prev_ts = cur = 0
-        for is_new, t, v in zip(new_grp, pdf["ts_us"], pdf["value"]):
+        last_ts, cur = state if state is not None else (None, 0)
+        out: list[int] = []
+        for t, v in zip(ts, value):
             t = int(t)
             x = int(math.floor(float(v) * e6 + 0.5))
-            if is_new:
+            if last_ts is None:
                 cur = x
             else:
-                w = int(math.floor(e6 * (1.0 - math.exp(-(t - prev_ts) / tau_us)) + 0.5))
+                w = int(math.floor(e6 * (1.0 - math.exp(-(t - last_ts) / tau_us)) + 0.5))
                 cur = (w * x + (e6 - w) * cur) // e6
-            prev_ts = t
-            ema.append(cur)
-        out = pdf[["user_id", "event_id", "ts_us", "value"]].copy()
-        out["ema_e6"] = ema
-        return out
+            last_ts = t
+            out.append(cur)
+        return (last_ts, cur), out
 
-    # rows with no measurement carry no state update: drop NULL values
-    # before the Arrow stage (float(None) would throw in the scan)
-    prepared = events.filter(F.col("value").isNotNull()).select(
-        "user_id", "event_id", F.unix_micros("ts").alias("ts_us"), "value"
+    return keyed_fold(
+        "user_id", ["ts_us", "event_id"], ["ts_us", "value"],
+        ["user_id", "event_id", "ts_us", "value"], ["ema_e6"], ema,
     )
+
+
+def ema_frame(events: DataFrame) -> DataFrame:
+    fold = ema_fold()
     # ~1.5k users per sf0.1 shard and growing with data size: use the
     # whole-partition grouped map to amortise per-group Arrow overhead.
     return sorted_grouped_map(
-        prepared, ["user_id"], ema_batch, EMA_SCHEMA, whole_batch=True
+        user_values(events), ["user_id"], lambda pdf: fold(pdf)[0], EMA_SCHEMA,
+        whole_batch=True,
     )
 
 
@@ -149,37 +156,78 @@ HOLT_SCHEMA = (
     " trend_e6 bigint, forecast_e6 bigint"
 )
 
-# floor-division helper for the oracle: DuckDB // truncates toward zero
-# while the Python worker floors; subtracting the non-negative residue
-# first makes both exact floor (the events_ema_irregular idiom). Here
-# the trend term CAN go negative (a falling series), so this is not
-# just future-proofing.
-def _floordiv_sql(expr: str, d: int) -> str:
-    return f"(({expr}) - (((({expr}) % {d}) + {d}) % {d})) // {d}"
+
+def hourly_counts(ev: DataFrame) -> DataFrame:
+    """``(event_type, hour_idx, n)``: events counted per type and hour,
+    the series the Holt, seasonal-Holt and CUSUM recurrences run on."""
+    hour_idx = (
+        (F.unix_micros("ts") - F.pmod(F.unix_micros("ts"), F.lit(US_1H))) / F.lit(US_1H)
+    ).cast("long")
+    return (
+        ev.select("event_type", hour_idx.alias("hour_idx"))
+        .groupBy("event_type", "hour_idx")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+    )
 
 
-HOLT_ORACLE = f"""
-WITH RECURSIVE hourly AS (
+def holt_fold():
+    """Keyed fold of Holt's ×1e6 level + trend recurrence over each
+    type's ``x_e6`` series in hour order; state ``(level, trend)``. One
+    definition for the plain and the seasonal Holt operator."""
+    e6, alpha, beta = E6, ALPHA_E6, BETA_E6
+
+    def holt(state, x):
+        lvl, trd = state if state is not None else (None, 0)
+        lv: list[int] = []
+        tr: list[int] = []
+        fc: list[int] = []
+        for xi in x:
+            xi = int(xi)
+            if lvl is None:
+                lvl = xi
+            else:
+                nl = (alpha * xi + (e6 - alpha) * (lvl + trd)) // e6
+                trd = (beta * (nl - lvl) + (e6 - beta) * trd) // e6
+                lvl = nl
+            lv.append(lvl)
+            tr.append(trd)
+            fc.append(lvl + trd)
+        return (lvl, trd), lv, tr, fc
+
+    return keyed_fold(
+        "event_type", ["hour_idx"], ["x_e6"], ["event_type", "hour_idx", "n"],
+        ["level_e6", "trend_e6", "forecast_e6"], holt,
+    )
+
+
+# the oracles' hourly series and Holt recursion over a (…, x_e6, rn) seq
+_HOURLY_SQL = f"""hourly AS (
   SELECT event_type, (epoch_us(ts) // {US_1H}) AS hour_idx,
          CAST(COUNT(*) AS BIGINT) AS n
   FROM events GROUP BY 1, 2
-), seq AS (
-  SELECT event_type, hour_idx, n, n * {E6} AS x_e6,
-         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hour_idx) AS rn
-  FROM hourly
-), rec AS (
+)"""
+_HOLT_LEVEL_SQL = _floordiv_sql(
+    f"{ALPHA_E6} * s.x_e6 + ({E6} - {ALPHA_E6}) * (r.level_e6 + r.trend_e6)", E6
+)
+_HOLT_REC_SQL = f"""rec AS (
   SELECT event_type, hour_idx, n, rn,
          x_e6 AS level_e6, CAST(0 AS BIGINT) AS trend_e6
   FROM seq WHERE rn = 1
   UNION ALL
   SELECT s.event_type, s.hour_idx, s.n, s.rn,
-         {_floordiv_sql(f"{ALPHA_E6} * s.x_e6 + ({E6} - {ALPHA_E6}) * (r.level_e6 + r.trend_e6)", E6)},
+         {_HOLT_LEVEL_SQL},
          {_floordiv_sql(
-             f"{BETA_E6} * (" + _floordiv_sql(
-                 f"{ALPHA_E6} * s.x_e6 + ({E6} - {ALPHA_E6}) * (r.level_e6 + r.trend_e6)", E6
-             ) + f" - r.level_e6) + ({E6} - {BETA_E6}) * r.trend_e6", E6)}
+             f"{BETA_E6} * ({_HOLT_LEVEL_SQL} - r.level_e6) + ({E6} - {BETA_E6}) * r.trend_e6", E6
+         )}
   FROM seq s JOIN rec r ON s.event_type = r.event_type AND s.rn = r.rn + 1
-)
+)"""
+
+HOLT_ORACLE = f"""
+WITH RECURSIVE {_HOURLY_SQL}, seq AS (
+  SELECT event_type, hour_idx, n, n * {E6} AS x_e6,
+         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hour_idx) AS rn
+  FROM hourly
+), {_HOLT_REC_SQL}
 SELECT event_type, hour_idx, n, level_e6, trend_e6,
        level_e6 + trend_e6 AS forecast_e6
 FROM rec
@@ -208,42 +256,12 @@ def events_holt_linear(
         # callers composing several models over the SAME series (the
         # forecast ensemble) pass a shared pinned hourly frame instead
         # of re-aggregating the events corpus per model arm
-        ev = load_table(spark, sf_dir, "events")
-        hour_idx = (
-            (F.unix_micros("ts") - F.pmod(F.unix_micros("ts"), F.lit(US_1H)))
-            / F.lit(US_1H)
-        ).cast("long")
-        hourly = (
-            ev.select("event_type", hour_idx.alias("hour_idx"))
-            .groupBy("event_type", "hour_idx")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-    e6, alpha, beta = E6, ALPHA_E6, BETA_E6
-
-    def holt_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Closure (not module-level) so cloudpickle ships it by value —
-        # Python workers never import this package (driver contract
-        # runs from an arbitrary cwd).
-        pdf = pdf.sort_values("hour_idx").reset_index(drop=True)
-        x = [int(v) * e6 for v in pdf["n"]]
-        lvl: list[int] = []
-        trd: list[int] = []
-        for i, xi in enumerate(x):
-            if i == 0:
-                lvl.append(xi)
-                trd.append(0)
-            else:
-                nl = (alpha * xi + (e6 - alpha) * (lvl[-1] + trd[-1])) // e6
-                nt = (beta * (nl - lvl[-1]) + (e6 - beta) * trd[-1]) // e6
-                lvl.append(nl)
-                trd.append(nt)
-        out = pdf[["event_type", "hour_idx", "n"]].copy()
-        out["level_e6"] = lvl
-        out["trend_e6"] = trd
-        out["forecast_e6"] = [a + b for a, b in zip(lvl, trd)]
-        return out
-
-    return hourly.groupBy("event_type").applyInPandas(holt_group, schema=HOLT_SCHEMA)
+        hourly = hourly_counts(load_table(spark, sf_dir, "events"))
+    fold = holt_fold()
+    seq = hourly.select("event_type", "hour_idx", "n", (F.col("n") * E6).alias("x_e6"))
+    return seq.groupBy("event_type").applyInPandas(
+        lambda pdf: fold(pdf)[0], schema=HOLT_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -311,17 +329,8 @@ def events_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Seasonal Holt (Holt-Winters-style): deseasonalize -> Holt -> re-seasonalize
 # ---------------------------------------------------------------------------
 
-HW_SCHEMA = (
-    "event_type string, hour_idx bigint, n bigint, level_e6 bigint,"
-    " trend_e6 bigint, forecast_e6 bigint"
-)
-
 HW_ORACLE = f"""
-WITH RECURSIVE hourly AS (
-  SELECT event_type, (epoch_us(ts) // {US_1H}) AS hour_idx,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-), sidx AS (
+WITH RECURSIVE {_HOURLY_SQL}, sidx AS (
   SELECT event_type, hour_idx % 24 AS hod,
          (CAST(SUM(n) AS BIGINT) * {E6}) // CAST(COUNT(*) AS BIGINT) AS m_hod_e6
   FROM hourly GROUP BY 1, 2
@@ -338,19 +347,7 @@ WITH RECURSIVE hourly AS (
          ROW_NUMBER() OVER (PARTITION BY h.event_type ORDER BY h.hour_idx) AS rn
   FROM hourly h
   JOIN sadj sa ON sa.event_type = h.event_type AND sa.hod = h.hour_idx % 24
-), rec AS (
-  SELECT event_type, hour_idx, n, rn,
-         x_e6 AS level_e6, CAST(0 AS BIGINT) AS trend_e6
-  FROM seq WHERE rn = 1
-  UNION ALL
-  SELECT s.event_type, s.hour_idx, s.n, s.rn,
-         {_floordiv_sql(f"{ALPHA_E6} * s.x_e6 + ({E6} - {ALPHA_E6}) * (r.level_e6 + r.trend_e6)", E6)},
-         {_floordiv_sql(
-             f"{BETA_E6} * (" + _floordiv_sql(
-                 f"{ALPHA_E6} * s.x_e6 + ({E6} - {ALPHA_E6}) * (r.level_e6 + r.trend_e6)", E6
-             ) + f" - r.level_e6) + ({E6} - {BETA_E6}) * r.trend_e6", E6)}
-  FROM seq s JOIN rec r ON s.event_type = r.event_type AND s.rn = r.rn + 1
-)
+), {_HOLT_REC_SQL}
 SELECT r.event_type, r.hour_idx, r.n, r.level_e6, r.trend_e6,
        r.level_e6 + r.trend_e6 + sn.s_e6 AS forecast_e6
 FROM rec r
@@ -384,16 +381,8 @@ def events_holt_winters(
     if hourly is None:
         # the forecast ensemble passes a shared pinned hourly frame so
         # its model arms aggregate the events corpus once, not per arm
-        ev = load_table(spark, sf_dir, "events")
-        hour_idx = (
-            (F.unix_micros("ts") - F.pmod(F.unix_micros("ts"), F.lit(US_1H)))
-            / F.lit(US_1H)
-        ).cast("long")
-        hourly = (
-            ev.select("event_type", hour_idx.alias("hour_idx"))
-            .groupBy("event_type", "hour_idx")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .transform(pin)  # feeds index build + adjusted series
+        hourly = hourly_counts(load_table(spark, sf_dir, "events")).transform(
+            pin  # feeds index build + adjusted series
         )
     sidx = hourly.groupBy(
         "event_type", F.pmod("hour_idx", F.lit(24)).alias("hod")
@@ -422,29 +411,10 @@ def events_holt_winters(
             (F.col("n") * E6 - F.col("s_e6")).alias("x_e6"),
         )
     )
-    e6, alpha, beta = E6, ALPHA_E6, BETA_E6
-
-    def hw_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("hour_idx").reset_index(drop=True)
-        x = [int(v) for v in pdf["x_e6"]]
-        lvl: list[int] = []
-        trd: list[int] = []
-        for i, xi in enumerate(x):
-            if i == 0:
-                lvl.append(xi)
-                trd.append(0)
-            else:
-                nl = (alpha * xi + (e6 - alpha) * (lvl[-1] + trd[-1])) // e6
-                nt = (beta * (nl - lvl[-1]) + (e6 - beta) * trd[-1]) // e6
-                lvl.append(nl)
-                trd.append(nt)
-        out = pdf[["event_type", "hour_idx", "n"]].copy()
-        out["level_e6"] = lvl
-        out["trend_e6"] = trd
-        out["forecast_e6"] = [a + b for a, b in zip(lvl, trd)]
-        return out
-
-    rec = seq.groupBy("event_type").applyInPandas(hw_group, schema=HW_SCHEMA)
+    fold = holt_fold()
+    rec = seq.groupBy("event_type").applyInPandas(
+        lambda pdf: fold(pdf)[0], schema=HOLT_SCHEMA
+    )
     # re-seasonalize the one-hour-ahead forecast with the NEXT hod's index
     nxt = sadj.select(
         F.col("s_et").alias("n_et"), F.col("hod").alias("nhod"), F.col("s_e6").alias("sn_e6")
@@ -549,27 +519,18 @@ def croston_frame(wk: DataFrame) -> DataFrame:
     ``(l_partkey, week_idx, demand_c)`` weekly-demand frame."""
     e6, alpha = E6, CROSTON_ALPHA_E6
 
-    def croston_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Whole-batch linear pass over many complete part series: one
-        # sort, one loop, key transitions reset the recurrence. Python
-        # ints on purpose — the fixed-point products must not overflow
-        # int64 silently at larger demand magnitudes.
-        pdf = pdf.sort_values(["l_partkey", "week_idx"]).reset_index(drop=True)
+    def croston(state, week, demand):
+        # Python ints on purpose — the fixed-point products must not
+        # overflow int64 silently at larger demand magnitudes.
+        prev_w, zz, pp = state if state is not None else (None, 0, e6)
         z: list[int] = []
         p: list[int] = []
         rate: list[int] = []
-        prev_w = zz = pp = 0
-        kcol = pdf["l_partkey"]
-        # NaN-safe boundary mask: nulls sort together and must form ONE
-        # group (groupBy / SQL PARTITION BY semantics), so NaN→NaN is
-        # not a boundary even though NaN != NaN.
-        new_grp = ((kcol != kcol.shift()) & ~(kcol.isna() & kcol.shift().isna())).tolist()
-        new_grp[0] = True
-        for is_new, w, dc in zip(new_grp, pdf["week_idx"], pdf["demand_c"]):
+        for w, dc in zip(week, demand):
             w = int(w)
             xi = int(dc) * e6
-            if is_new:
-                zz, pp = xi, e6
+            if prev_w is None:
+                zz = xi
             else:
                 q = (w - prev_w) * e6
                 zz = (alpha * xi + (e6 - alpha) * zz) // e6
@@ -578,16 +539,16 @@ def croston_frame(wk: DataFrame) -> DataFrame:
             z.append(zz)
             p.append(pp)
             rate.append((zz * 1000) // (pp // 1000))
-        out = pdf[["l_partkey", "week_idx", "demand_c"]].copy()
-        out["z_e6"] = z
-        out["p_e6"] = p
-        out["rate_e6"] = rate
-        return out
+        return (prev_w, zz, pp), z, p, rate
 
+    fold = keyed_fold(
+        "l_partkey", ["week_idx"], ["week_idx", "demand_c"],
+        ["l_partkey", "week_idx", "demand_c"], ["z_e6", "p_e6", "rate_e6"], croston,
+    )
     # 20k part keys at sf0.1 (≈30 weekly rows each): per-group Arrow
     # dispatch dominated the runtime — whole-partition batching cuts it.
     return sorted_grouped_map(
-        wk, ["l_partkey"], croston_batch, CROSTON_SCHEMA, whole_batch=True
+        wk, ["l_partkey"], lambda pdf: fold(pdf)[0], CROSTON_SCHEMA, whole_batch=True
     )
 
 
@@ -604,11 +565,7 @@ CUSUM_SCHEMA = (
 )
 
 CUSUM_ORACLE = f"""
-WITH RECURSIVE hourly AS (
-  SELECT event_type, (epoch_us(ts) // {US_1H}) AS hour_idx,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-), mu AS (
+WITH RECURSIVE {_HOURLY_SQL}, mu AS (
   SELECT event_type,
          (CAST(SUM(n) AS BIGINT) * {E6}) // CAST(COUNT(*) AS BIGINT) AS mu_e6
   FROM hourly GROUP BY 1
@@ -648,26 +605,18 @@ def events_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     reset), so the tiny per-type hourly series runs through an Arrow
     closure, replayed exactly by the recursive-CTE oracle (GREATEST is
     exact on integers, so floor/truncate reconciliation never arises)."""
-    ev = load_table(spark, sf_dir, "events")
-    hour_idx = (
-        (F.unix_micros("ts") - F.pmod(F.unix_micros("ts"), F.lit(US_1H))) / F.lit(US_1H)
-    ).cast("long")
-    hourly = (
-        ev.select("event_type", hour_idx.alias("hour_idx"))
-        .groupBy("event_type", "hour_idx")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    return cusum_frame(hourly)
+    return cusum_frame(hourly_counts(load_table(spark, sf_dir, "events")))
 
 
-def cusum_frame(hourly: DataFrame) -> DataFrame:
-    """Core of :func:`events_cusum_alarm` over any
-    ``(event_type, hour_idx, n)`` hourly-count frame."""
+def cusum_inputs(hourly: DataFrame) -> DataFrame:
+    """The monitor input ``(event_type, hour_idx, n, inc_e6, h_e6)``:
+    hourly counts joined with their per-type parameters, read by the
+    batch monitor and staged as the streaming twin's source."""
     hourly = hourly.transform(pin)  # feeds mu + the series
     mu = hourly.groupBy("event_type").agg(
         F.expr(f"(SUM(n) * {E6}) div COUNT(*)").cast("long").alias("mu_e6")
     )
-    seq = hourly.join(F.broadcast(mu), "event_type").select(
+    return hourly.join(F.broadcast(mu), "event_type").select(
         "event_type",
         "hour_idx",
         "n",
@@ -675,21 +624,34 @@ def cusum_frame(hourly: DataFrame) -> DataFrame:
         (F.col("mu_e6") * 3).alias("h_e6"),
     )
 
-    def cusum_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("hour_idx").reset_index(drop=True)
-        s = 0
+
+def cusum_fold():
+    """Keyed fold of the one-sided S⁺ statistic over each type's
+    ``cusum_inputs`` rows in hour order; state ``(s_plus_e6,)``."""
+
+    def cusum(state, inc, h):
+        (s,) = state if state is not None else (0,)
         out_s: list[int] = []
         alarms: list[bool] = []
-        for inc, h in zip(pdf["inc_e6"], pdf["h_e6"]):
-            s = max(0, s + int(inc))
+        for i, hi in zip(inc, h):
+            s = max(0, s + int(i))
             out_s.append(s)
-            alarms.append(s > int(h))
-        out = pdf[["event_type", "hour_idx", "n"]].copy()
-        out["s_plus_e6"] = out_s
-        out["alarm"] = alarms
-        return out
+            alarms.append(s > int(hi))
+        return (s,), out_s, alarms
 
-    return seq.groupBy("event_type").applyInPandas(cusum_group, schema=CUSUM_SCHEMA)
+    return keyed_fold(
+        "event_type", ["hour_idx"], ["inc_e6", "h_e6"], ["event_type", "hour_idx", "n"],
+        ["s_plus_e6", "alarm"], cusum,
+    )
+
+
+def cusum_frame(hourly: DataFrame) -> DataFrame:
+    """Core of :func:`events_cusum_alarm` over any
+    ``(event_type, hour_idx, n)`` hourly-count frame."""
+    fold = cusum_fold()
+    return cusum_inputs(hourly).groupBy("event_type").applyInPandas(
+        lambda pdf: fold(pdf)[0], schema=CUSUM_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -751,16 +713,7 @@ def events_forecast_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both model arms consume the same frame (each arm used to re-run
     # the corpus aggregation internally — a duplicate pass the plan
     # audit could not see past the winters arm's internal pin)
-    ev = load_table(spark, sf_dir, "events")
-    hour_idx = (
-        (F.unix_micros("ts") - F.pmod(F.unix_micros("ts"), F.lit(US_1H))) / F.lit(US_1H)
-    ).cast("long")
-    hourly = (
-        ev.select("event_type", hour_idx.alias("hour_idx"))
-        .groupBy("event_type", "hour_idx")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .transform(pin)
-    )
+    hourly = hourly_counts(load_table(spark, sf_dir, "events")).transform(pin)
     holt = events_holt_linear(spark, sf_dir, hourly=hourly).select(
         "event_type", "hour_idx", "n", F.col("forecast_e6").alias("f_holt")
     )
@@ -824,18 +777,13 @@ KALMAN_SCHEMA = (
     "kalman_e6 bigint, p_e6 bigint"
 )
 
-# floor-division of a possibly-negative numerator, both engines (the
-# EMA oracle idiom): subtract the canonical non-negative residue first.
-_FDIV = "(({n}) - (((({n}) % {d}) + {d}) % {d})) // {d}"
-
-
 def _kalman_oracle() -> str:
     e6, q, r = E6, KAL_Q_E6, KAL_R_E6
     innov = f"(w.z_e6 - r.kalman_e6)"
     pq = f"(r.p_e6 + {q})"
-    k = _FDIV.format(n=f"{pq} * {e6}", d=f"({pq} + {r})")
-    x_next = f"r.kalman_e6 + {_FDIV.format(n=f'({k}) * {innov}', d=e6)}"
-    p_next = _FDIV.format(n=f"({e6} - ({k})) * {pq}", d=e6)
+    k = _floordiv_sql(f"{pq} * {e6}", f"({pq} + {r})")
+    x_next = f"r.kalman_e6 + {_floordiv_sql(f'({k}) * {innov}', e6)}"
+    p_next = _floordiv_sql(f"({e6} - ({k})) * {pq}", e6)
     return f"""
 WITH RECURSIVE base AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us, value,
@@ -857,6 +805,36 @@ SELECT user_id, event_id, ts_us, value, kalman_e6, p_e6 FROM rec
 
 
 KALMAN_ORACLE = _kalman_oracle()
+
+
+def kalman_fold():
+    """Keyed fold of the ×1e6 1-D Kalman filter per user, in
+    (ts, event_id) order; state ``(x, p)``."""
+    e6, q_e6, r_e6 = E6, KAL_Q_E6, KAL_R_E6
+
+    def kalman(state, value):
+        import math
+
+        x, p = state if state is not None else (None, r_e6)
+        xs: list[int] = []
+        ps: list[int] = []
+        for v in value:
+            z = int(math.floor(float(v) * e6 + 0.5))
+            if x is None:
+                x = z
+            else:
+                pq = p + q_e6
+                k = (pq * e6) // (pq + r_e6)
+                x = x + (k * (z - x)) // e6
+                p = ((e6 - k) * pq) // e6
+            xs.append(x)
+            ps.append(p)
+        return (x, p), xs, ps
+
+    return keyed_fold(
+        "user_id", ["ts_us", "event_id"], ["value"],
+        ["user_id", "event_id", "ts_us", "value"], ["kalman_e6", "p_e6"], kalman,
+    )
 
 
 @register("events_kalman_filter", oracle=KALMAN_ORACLE, tags=("events", "llm", "pandas"))
@@ -881,40 +859,8 @@ def events_kalman_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one shuffle on user_id, Arrow-batched per-group scan,
     O(events/user) work — identical to events_ema_irregular; at 100 TB
     the recurrence shards perfectly by key."""
-    e6, q_e6, r_e6 = E6, KAL_Q_E6, KAL_R_E6
-
-    def kalman_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        import math
-
-        pdf = pdf.sort_values(["user_id", "ts_us", "event_id"]).reset_index(drop=True)
-        kcol = pdf["user_id"]
-        new_grp = ((kcol != kcol.shift()) & ~(kcol.isna() & kcol.shift().isna())).tolist()
-        new_grp[0] = True
-        xs: list[int] = []
-        ps: list[int] = []
-        x = p = 0
-        for is_new, v in zip(new_grp, pdf["value"]):
-            z = int(math.floor(float(v) * e6 + 0.5))
-            if is_new:
-                x, p = z, r_e6
-            else:
-                pq = p + q_e6
-                k = (pq * e6) // (pq + r_e6)
-                x = x + (k * (z - x)) // e6
-                p = ((e6 - k) * pq) // e6
-            xs.append(x)
-            ps.append(p)
-        out = pdf[["user_id", "event_id", "ts_us", "value"]].copy()
-        out["kalman_e6"] = xs
-        out["p_e6"] = ps
-        return out
-
-    # NULL values carry no measurement — same fail-soft as ema_frame
-    prepared = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select("user_id", "event_id", F.unix_micros("ts").alias("ts_us"), "value")
-    )
+    fold = kalman_fold()
     return sorted_grouped_map(
-        prepared, ["user_id"], kalman_batch, KALMAN_SCHEMA, whole_batch=True
+        user_values(load_table(spark, sf_dir, "events")), ["user_id"],
+        lambda pdf: fold(pdf)[0], KALMAN_SCHEMA, whole_batch=True,
     )

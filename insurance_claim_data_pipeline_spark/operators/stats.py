@@ -891,6 +891,17 @@ def _cuped_mom_sql(expr: str) -> str:
     )
 
 
+def _cuped_mom(expr):
+    # Spark twin of _cuped_mom_sql: quantize through DECIMAL(38,6), then
+    # a decimal(38,0) sum. The long sum wraps at scale (see _mom_sum_sql) AND
+    # floor(double)->long silently saturates per row once a hot key
+    # pushes one term past int64 — the decimal path is exact to 1e32.
+    return F.sum(
+        F.floor((expr * F.lit(_CUPED_E) + F.lit(0.5)).cast("decimal(38,6)"))
+        .cast("decimal(38,0)")
+    ).cast("double") / F.lit(_CUPED_E)
+
+
 def _cuped_oracle() -> str:
     from ..functions.stable import dec_sum_sql
 
@@ -959,25 +970,14 @@ def stats_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("_np") > 0) & (F.col("_nq") > 0))
     )
 
-    def mom(expr):
-        # quantize through DECIMAL(38,6), then a decimal(38,0) sum: the
-        # long sum wraps at scale (see _mom_sum) AND floor(double)->long
-        # silently saturates per row once a hot key pushes one term past
-        # int64 (r11 skew finding, see _cuped_mom_sql) — the decimal
-        # path is exact to 1e32 and mirrored in the oracle.
-        return F.sum(
-            F.floor((expr * F.lit(_CUPED_E) + F.lit(0.5)).cast("decimal(38,6)"))
-            .cast("decimal(38,0)")
-        ).cast("double") / F.lit(_CUPED_E)
-
     x, y = F.col("x"), F.col("y")
     m = per_user.agg(
         F.count(F.lit(1)).alias("n"),
-        mom(x).alias("sx"),
-        mom(y).alias("sy"),
-        mom(x * x).alias("sxx"),
-        mom(x * y).alias("sxy"),
-        mom(y * y).alias("syy"),
+        _cuped_mom(x).alias("sx"),
+        _cuped_mom(y).alias("sy"),
+        _cuped_mom(x * x).alias("sxx"),
+        _cuped_mom(x * y).alias("sxy"),
+        _cuped_mom(y * y).alias("syy"),
     )
     n = F.col("n")
     var_x = F.col("sxx") / n - (F.col("sx") / n) * (F.col("sx") / n)
@@ -1245,22 +1245,11 @@ def stats_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
         dec_sum("value").alias("y"),
     )
 
-    def mom(expr):
-        # quantize through DECIMAL(38,6), then a decimal(38,0) sum: the
-        # long sum wraps at scale (see _mom_sum) AND floor(double)->long
-        # silently saturates per row once a hot key pushes one term past
-        # int64 (r11 skew finding, see _cuped_mom_sql) — the decimal
-        # path is exact to 1e32 and mirrored in the oracle.
-        return F.sum(
-            F.floor((expr * F.lit(_CUPED_E) + F.lit(0.5)).cast("decimal(38,6)"))
-            .cast("decimal(38,0)")
-        ).cast("double") / F.lit(_CUPED_E)
-
     m = per_user.agg(
         F.count(F.lit(1)).cast("long").alias("n_units"),
         F.sum("treated").cast("long").alias("n_t"),
-        mom(F.col("y")).alias("s"),
-        mom(F.col("y") * F.col("y")).alias("ss"),
+        _cuped_mom(F.col("y")).alias("s"),
+        _cuped_mom(F.col("y") * F.col("y")).alias("ss"),
     )
     mu = F.col("s") / F.col("n_units")
     var = (F.col("ss") - F.col("s") * mu) / nonzero(F.col("n_units") - 1)
@@ -1336,21 +1325,10 @@ def stats_paired_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("_np") > 0) & (F.col("_nq") > 0))
     )
 
-    def mom(expr):
-        # quantize through DECIMAL(38,6), then a decimal(38,0) sum: the
-        # long sum wraps at scale (see _mom_sum) AND floor(double)->long
-        # silently saturates per row once a hot key pushes one term past
-        # int64 (r11 skew finding, see _cuped_mom_sql) — the decimal
-        # path is exact to 1e32 and mirrored in the oracle.
-        return F.sum(
-            F.floor((expr * F.lit(_CUPED_E) + F.lit(0.5)).cast("decimal(38,6)"))
-            .cast("decimal(38,0)")
-        ).cast("double") / F.lit(_CUPED_E)
-
     m = per_user.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        mom(F.col("d")).alias("s"),
-        mom(F.col("d") * F.col("d")).alias("ss"),
+        _cuped_mom(F.col("d")).alias("s"),
+        _cuped_mom(F.col("d") * F.col("d")).alias("ss"),
     )
     n = F.col("n")
     mean_d = F.col("s") / n

@@ -42,19 +42,6 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def tiny_frame_key(col_name: str):
     """Window partition key that is constantly 0 but survives constant
@@ -372,11 +359,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     except AnalysisException:
         pass  # conf may be driver-locked; normalize_timestamps covers it
     return normalize_timestamps(spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")))
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLE_NAMES):
-    """Read several synthetic tables; returns {name: DataFrame}."""
-    return {name: load_table(spark, sf_dir, name) for name in names}
 
 
 def parquet_num_rows(sf_dir: str, name: str) -> int:

@@ -30,9 +30,22 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.ema import CUSUM_ORACLE, EMA_ORACLE, KALMAN_ORACLE
+from ..operators.ema import (
+    CUSUM_ORACLE,
+    CUSUM_SCHEMA,
+    EMA_ORACLE,
+    EMA_SCHEMA,
+    KALMAN_ORACLE,
+    KALMAN_SCHEMA,
+    cusum_fold,
+    cusum_inputs,
+    ema_fold,
+    hourly_counts,
+    kalman_fold,
+    user_values,
+)
 from ..registry import register
-from ..session import load_table, pin
+from ..session import load_table
 
 OUTPUT_SCHEMA = (
     "user_id bigint, n_events bigint, sum_value_cents bigint, last_event_us bigint"
@@ -135,12 +148,32 @@ def events_user_totals_stateful_streaming(spark: SparkSession, sf_dir: str) -> D
     )
 
 
+def _fold_stream(df: DataFrame, key: str, fold, out_schema: str, state_schema: str) -> DataFrame:
+    """Stream twin of a batch recurrence: each micro-batch of one key's
+    rows runs the batch operator's keyed fold (operators/ema.py),
+    starting from the key's stored state, and stores the end state."""
+
+    def update(
+        _key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        out, end = fold(
+            pd.concat(list(pdfs), ignore_index=True), state.get if state.exists else None
+        )
+        state.update(end)
+        yield out
+
+    return df.groupBy(key).applyInPandasWithState(
+        update,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
 # ---------------------------------------------------------------------------
 # Stateful streaming EMA (streaming twin of operators/ema.py)
 # ---------------------------------------------------------------------------
-
-EMA_OUT_SCHEMA = "user_id bigint, event_id bigint, ts_us bigint, value double, ema_e6 bigint"
-EMA_STATE_SCHEMA = "last_ts bigint, ema bigint, initialized bigint"
 
 
 def ema_stream(events: DataFrame) -> DataFrame:
@@ -155,54 +188,11 @@ def ema_stream(events: DataFrame) -> DataFrame:
     time-ordered file drops and for any replayed log partitioned by
     key). A production deployment that can see cross-batch disorder
     fronts this with a watermark + sort buffer; state here is O(users),
-    one shuffle per micro-batch."""
-
-    def update_ema(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        # Same integer recurrence as the batch twin — closure-shipped,
-        # stdlib math only (see update_user_totals above for why).
-        import math
-
-        e6 = 1_000_000
-        tau = 3_600_000_000.0
-        (user_id,) = key
-        last_ts, ema, initialized = state.get if state.exists else (0, 0, 0)
-        out: dict[str, list] = {"user_id": [], "event_id": [], "ts_us": [], "value": [], "ema_e6": []}
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values(["ts_us", "event_id"]).reset_index(drop=True)
-        for row in batch.itertuples(index=False):
-            ts_us = int(row.ts_us)
-            x = int(math.floor(float(row.value) * e6 + 0.5))
-            if not initialized:
-                ema, initialized = x, 1
-            else:
-                w = int(math.floor(e6 * (1.0 - math.exp(-(ts_us - last_ts) / tau)) + 0.5))
-                ema = (w * x + (e6 - w) * ema) // e6
-            last_ts = ts_us
-            out["user_id"].append(user_id)
-            out["event_id"].append(int(row.event_id))
-            out["ts_us"].append(ts_us)
-            out["value"].append(float(row.value))
-            out["ema_e6"].append(ema)
-        state.update((last_ts, ema, initialized))
-        yield pd.DataFrame(out)
-
-    # NULL measurements sit out BEFORE the Arrow stage — the identical
-    # fail-soft filter the batch twin applies (operators/ema.py:120), so
-    # stream == batch holds on NULL-bearing corpora too. Without it a
-    # NULL value is a float(None) TypeError inside the state handler —
-    # invisible until r09's directory-layout fix let file streams
-    # actually read the NULL-payload probe fixture (caught r10).
-    prepared = events.filter(F.col("value").isNotNull()).select(
-        "user_id", "event_id", F.unix_micros("ts").alias("ts_us"), "value"
-    )
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        update_ema,
-        outputStructType=EMA_OUT_SCHEMA,
-        stateStructType=EMA_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    one shuffle per micro-batch. NULL measurements sit out before the
+    Arrow stage, as in the batch twin (``user_values``), so stream ==
+    batch holds on NULL-bearing corpora too."""
+    return _fold_stream(
+        user_values(events), "user_id", ema_fold(), EMA_SCHEMA, "last_ts bigint, ema bigint"
     )
 
 
@@ -231,12 +221,6 @@ def events_ema_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming CUSUM monitor (stateful twin of events_cusum_alarm)
 # ---------------------------------------------------------------------------
 
-CUSUM_OUT_SCHEMA = (
-    "event_type string, hour_idx long, n long, s_plus_e6 long, alarm boolean"
-)
-CUSUM_STATE_SCHEMA = "s_plus_e6 long"
-
-
 def cusum_stream(seq: DataFrame) -> DataFrame:
     """Streaming one-sided CUSUM over a pre-aggregated metric stream:
     each micro-batch of (event_type, hour_idx, n, inc_e6, h_e6) rows
@@ -246,69 +230,13 @@ def cusum_stream(seq: DataFrame) -> DataFrame:
     (here: joined into the rows upstream, exactly how a monitoring
     topic carries its thresholds). A drained time-ordered stream emits
     the batch answer row for row; state is ONE integer per series."""
-
-    def update_cusum(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (event_type,) = key
-        (s,) = state.get if state.exists else (0,)
-        out: dict[str, list] = {
-            "event_type": [],
-            "hour_idx": [],
-            "n": [],
-            "s_plus_e6": [],
-            "alarm": [],
-        }
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values("hour_idx").reset_index(drop=True)
-        for row in batch.itertuples(index=False):
-            s = max(0, s + int(row.inc_e6))
-            out["event_type"].append(event_type)
-            out["hour_idx"].append(int(row.hour_idx))
-            out["n"].append(int(row.n))
-            out["s_plus_e6"].append(s)
-            out["alarm"].append(bool(s > int(row.h_e6)))
-        state.update((s,))
-        yield pd.DataFrame(out)
-
-    return seq.groupBy("event_type").applyInPandasWithState(
-        update_cusum,
-        outputStructType=CUSUM_OUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _fold_stream(seq, "event_type", cusum_fold(), CUSUM_SCHEMA, "s_plus_e6 long")
 
 
 def cusum_seq_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The batch-side monitor input: hourly counts joined with their
-    per-type parameters (shared by the streaming twin and its test)."""
-    from ..operators.ema import E6, US_1H
-    from ..session import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    hour_idx = (
-        (F.unix_micros("ts") - F.pmod(F.unix_micros("ts"), F.lit(US_1H)))
-        / F.lit(US_1H)
-    ).cast("long")
-    hourly = (
-        ev.select("event_type", hour_idx.alias("hour_idx"))
-        .groupBy("event_type", "hour_idx")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .transform(pin)
-    )
-    mu = hourly.groupBy("event_type").agg(
-        F.expr(f"(SUM(n) * {E6}) div COUNT(*)").cast("long").alias("mu_e6")
-    )
-    return hourly.join(F.broadcast(mu), "event_type").select(
-        "event_type",
-        "hour_idx",
-        "n",
-        (F.col("n") * E6 - F.col("mu_e6") - F.expr("mu_e6 div 10"))
-        .cast("long")
-        .alias("inc_e6"),
-        (F.col("mu_e6") * 3).cast("long").alias("h_e6"),
-    )
+    """The batch-side monitor input (shared by the streaming twin and
+    its test)."""
+    return cusum_inputs(hourly_counts(load_table(spark, sf_dir, "events")))
 
 
 # The staged hourly frame is written coalesce(1) → the file source
@@ -345,65 +273,16 @@ def events_cusum_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming Kalman filter (stateful twin of events_kalman_filter)
 # ---------------------------------------------------------------------------
 
-KALMAN_OUT_SCHEMA = (
-    "user_id bigint, event_id bigint, ts_us bigint, value double, "
-    "kalman_e6 bigint, p_e6 bigint"
-)
-KALMAN_STATE_SCHEMA = "x bigint, p bigint, initialized bigint"
-
-
 def kalman_stream(events: DataFrame) -> DataFrame:
     """Streaming per-user 1-D Kalman filter: state is (level estimate,
     error covariance) in the batch twin's int64 ×1e6 fixed point
     (operators/ema.py::events_kalman_filter), so a drained finite
     stream emits EXACTLY the batch answer row for row. Same ordering
-    contract as ema_stream: (ts, event_id) fold within each
-    micro-batch, non-decreasing event time per user across batches."""
-
-    def update_kalman(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import math
-
-        e6 = 1_000_000
-        q_e6 = 250_000
-        r_e6 = 4_000_000
-        (user_id,) = key
-        x, p, initialized = state.get if state.exists else (0, 0, 0)
-        out: dict[str, list] = {
-            "user_id": [], "event_id": [], "ts_us": [], "value": [],
-            "kalman_e6": [], "p_e6": [],
-        }
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values(["ts_us", "event_id"]).reset_index(drop=True)
-        for row in batch.itertuples(index=False):
-            z = int(math.floor(float(row.value) * e6 + 0.5))
-            if not initialized:
-                x, p, initialized = z, r_e6, 1
-            else:
-                pq = p + q_e6
-                k = (pq * e6) // (pq + r_e6)
-                x = x + (k * (z - x)) // e6
-                p = ((e6 - k) * pq) // e6
-            out["user_id"].append(user_id)
-            out["event_id"].append(int(row.event_id))
-            out["ts_us"].append(int(row.ts_us))
-            out["value"].append(float(row.value))
-            out["kalman_e6"].append(x)
-            out["p_e6"].append(p)
-        state.update((x, p, initialized))
-        yield pd.DataFrame(out)
-
-    # same NULL sit-out as ema_stream / the batch twin (ema.py:915)
-    prepared = events.filter(F.col("value").isNotNull()).select(
-        "user_id", "event_id", F.unix_micros("ts").alias("ts_us"), "value"
-    )
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        update_kalman,
-        outputStructType=KALMAN_OUT_SCHEMA,
-        stateStructType=KALMAN_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    contract and NULL sit-out as ema_stream: (ts, event_id) fold within
+    each micro-batch, non-decreasing event time per user across
+    batches."""
+    return _fold_stream(
+        user_values(events), "user_id", kalman_fold(), KALMAN_SCHEMA, "x bigint, p bigint"
     )
 
 

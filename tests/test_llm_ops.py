@@ -539,6 +539,20 @@ def test_weighted_median_matches_bruteforce(spark, sf_dir):
                 break
 
 
+def test_weighted_median_udfs_declare_type_hints(spark, sf_dir):
+    """Both grouped-aggregate pandas UDFs are declared by type hints,
+    not by the deprecated ``PandasUDFType`` argument, which makes
+    PySpark warn on every build of the query."""
+    import warnings
+
+    from insurance_claim_data_pipeline_spark.operators import advanced
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        df = advanced.agg_weighted_median_pandas(spark, sf_dir)
+    assert df.columns == ["l_returnflag", "weighted_median", "n_rows"]
+
+
 def test_bigram_logprob_properties(spark, sf_dir):
     """Log-probabilities are non-positive; every multi-token doc is
     scored; a doc of one repeated bigram scores ~0 only if that bigram
