@@ -12,6 +12,8 @@ at full precision (outputs still rounded to 6 dp for belt-and-braces).
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -83,6 +85,20 @@ def cosine(a: Column, b: Column) -> Column:
 # deep Add tree defeats JIT inlining. The PQ min(struct) rewrite's
 # "HOFs are interpreted" lesson does NOT generalize to primitive-array
 # folds.
+
+
+def md5_plane(prefix: str) -> list[float]:
+    """The 64 weights of the deterministic random hyperplane keyed
+    ``prefix``: weight d is ``md5("{prefix}_{d}")``'s first 15 hex
+    digits mod 2001, shifted and scaled into [-1, 1] in steps of 0.001.
+    Reproducible across runs and engines, no RNG state to ship. Every
+    LSH plane bank draws from it, Spark frame and oracle literal alike
+    (``repr`` of these floats is an exact SQL double round-trip)."""
+    return [
+        (int(hashlib.md5(f"{prefix}_{d}".encode()).hexdigest()[:15], 16) % 2001 - 1000)
+        / 1000.0
+        for d in range(64)
+    ]
 
 
 # --- DuckDB mirrors (same fold order) --------------------------------------

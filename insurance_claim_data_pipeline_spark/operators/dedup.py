@@ -37,7 +37,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.text import shingle_rows, shingles_sql, tokens
-from ..functions.vectors import as_double, cosine_sql, dot, dot_float, dot_sql, norm
+from ..functions.vectors import as_double, cosine_sql, dot, dot_float, dot_sql, md5_plane, norm
 from ..registry import register
 from ..session import (
     is_pinned,
@@ -1952,16 +1952,11 @@ def _sem_lsh_planes(
     parsed as SQL doubles (exact round-trip; the trailing array cast
     also defends against DECIMAL literal inference), verified
     element-identical to the former frame."""
-    import hashlib
-
-    rows = []
-    for b in range(bands):
-        for p in range(rows_per_band):
-            w = []
-            for d in range(64):
-                h = int(hashlib.md5(f"{prefix}_{b}_{p}_{d}".encode()).hexdigest()[:15], 16)
-                w.append(repr((h % 2001 - 1000) / 1000.0))
-            rows.append(f"({b}, {p}, array({', '.join(w)}))")
+    rows = [
+        f"({b}, {p}, array({', '.join(map(repr, md5_plane(f'{prefix}_{b}_{p}')))}))"
+        for b in range(bands)
+        for p in range(rows_per_band)
+    ]
     return spark.sql(
         "SELECT CAST(band AS INT) band, CAST(prow AS INT) prow, "
         "CAST(w AS ARRAY<DOUBLE>) w FROM VALUES\n"
@@ -1978,17 +1973,11 @@ def _sem_lsh_planes_sql(
     """The same plane bank as :func:`_sem_lsh_planes`, emitted as a DuckDB
     VALUES literal (band, prow, w) — the oracle twin's source of the
     identical deterministic hyperplanes."""
-    import hashlib
-
-    rows = []
-    for b in range(bands):
-        for p in range(rows_per_band):
-            w = []
-            for d in range(64):
-                h = int(hashlib.md5(f"{prefix}_{b}_{p}_{d}".encode()).hexdigest()[:15], 16)
-                w.append(repr((h % 2001 - 1000) / 1000.0))
-            rows.append(f"({b}, {p}, [{', '.join(w)}]::DOUBLE[])")
-    return ",\n    ".join(rows)
+    return ",\n    ".join(
+        f"({b}, {p}, [{', '.join(map(repr, md5_plane(f'{prefix}_{b}_{p}')))}]::DOUBLE[])"
+        for b in range(bands)
+        for p in range(rows_per_band)
+    )
 
 
 def semantic_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -10,6 +10,13 @@ sign bits so each query only scans its bucket: candidate work drops by
 in tests/test_llm_ops.py. At 100 TB you'd add multi-probe (flip one
 bit) — implemented here — and/or an IVF coarse quantizer; the bucket
 join shape stays the same.
+
+The IVF coarse quantizer is written once, as three functions every IVF
+path shares (fixed, trained, IVF-PQ, nprobe sweep): ``fixed_anchors``
+(the fixed centroid / PQ codebook vectors), ``ivf_cells`` (each
+vector's max-cosine cell) and ``ivf_probes`` (each query's best cells).
+Zero-norm and NULL vectors sit out of all of them, and out of the exact
+baseline.
 """
 
 from __future__ import annotations
@@ -19,7 +26,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.stable import mean_e12, mean_e12_sql
-from ..functions.vectors import as_double, cosine, cosine_sql, dot, dot_sql, norm
+from ..functions.vectors import as_double, cosine, cosine_sql, dot, dot_sql, md5_plane, norm
 from ..functions.guards import nonzero
 from ..functions.localframe import local_frame
 from ..registry import register
@@ -55,9 +62,15 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the scan side, once per build row on the broadcast side), so the
     Q·N stage evaluates only the pairwise dot — 1/3 of the fold work,
     bit-unchanged (dedup_embedding_cosine's documented pattern)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
+    emb = (
+        load_table(spark, sf_dir, "embeddings")
+        .select("vec_id", as_double("embedding").alias("v"))
+        .withColumn("nrm", norm(F.col("v")))
+        # zero-norm / NULL vectors have no cosine: they sit out as
+        # queries and as neighbors, the rule of the IVF paths
+        # (ivf_cells); NULL != 0 is NULL, so NULL drops too
+        .filter(F.col("nrm") != 0)
+    )
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -123,6 +136,99 @@ SELECT query_id, neighbor_id, cos_sim, rnk FROM ranked WHERE rnk <= {TOP_K}
 """
 
 
+def fixed_anchors(emb: DataFrame) -> DataFrame:
+    """``(c_id, k, c_emb)`` — the N_CENTROIDS fixed anchor vectors
+    (vec_id IVF_C_LO..IVF_C_HI-1) that serve as the IVF coarse
+    quantizer's centroids (``c_id`` = vec_id) and as the PQ codebook
+    entries (``k`` = 0-based code). Fixed, so every quantizer built on
+    them is deterministic and oracle-checkable."""
+    return emb.filter(
+        (F.col("vec_id") >= IVF_C_LO) & (F.col("vec_id") < IVF_C_HI)
+    ).select(
+        F.col("vec_id").alias("c_id"),
+        (F.col("vec_id") - IVF_C_LO).alias("k"),
+        F.col("v").alias("c_emb"),
+    )
+
+
+# The coarse quantizer: ivf_cells assigns every vector to its cell,
+# ivf_probes ranks each query's best cells. Every IVF path (fixed,
+# trained, IVF-PQ, nprobe sweep) goes through these two, so all share
+# one set of non-finite guards (ADVICE r08/r09, tests/test_guards_r10.py):
+# - zero-norm / NULL centroids, vectors and queries sit out: cosine to
+#   them is undefined;
+# - under ANSI (this session's default) a zero norm throws
+#   DIVIDE_BY_ZERO at the division itself, before any filter can run,
+#   so the division is when()-guarded and yields NULL there;
+# - the NaN/NULL orderings of the two rankings disagree: desc(ccos)
+#   sorts NaN first and NULL last, min(struct(-ccos, …)) sorts NaN last
+#   and NULL first (a NULL would win). So non-finite scores are dropped
+#   explicitly, and NULL needs its own isNotNull(): isnan(NULL) is
+#   false, so ~isnan alone passes it.
+
+
+def _live_centroids(cent: DataFrame) -> DataFrame:
+    # K-sized frame, free filter; NULL != 0 is NULL, so NULL drops too
+    return cent.withColumn("cnrm", norm(F.col("c_emb"))).filter(F.col("cnrm") != 0)
+
+
+def _cell_cos(v: str, nrm: str) -> F.Column:
+    """Rounded cosine of ``v`` to the centroid ``c_emb``, NULL when
+    either norm is zero. Norms are precomputed per vector/centroid
+    below the joins (dedup_embedding_cosine's pattern), so the pairwise
+    stage folds only the dot — bit-unchanged."""
+    den = F.col(nrm) * F.col("cnrm")
+    return F.round(F.when(den != 0, dot(F.col(v), F.col("c_emb")) / den), 6)
+
+
+def ivf_cells(emb: DataFrame, cent: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
+    """``(vec_id, cluster, *keep)`` — every vector of ``emb`` ``(vec_id,
+    v)`` assigned to its max-cosine centroid of ``cent`` ``(c_id,
+    c_emb)``, ties to the lower c_id. ``keep`` names columns of ``emb``
+    (or ``nrm``) to carry through.
+
+    Struct-min argmax (ccos desc via exact negation): map-side
+    combinable, so each vector's K candidate rows collapse before any
+    exchange instead of a row_number window shuffling the corpus×K
+    frame. ``keep`` rides in the struct tail (c_id is unique per group,
+    so it never compares); a caller that needs no vector keeps none, and
+    its shuffle carries no 64-double payload."""
+    return (
+        emb.withColumn("nrm", norm(F.col("v")))
+        .crossJoin(F.broadcast(_live_centroids(cent)))
+        .select("vec_id", _cell_cos("v", "nrm").alias("ccos"), "c_id", *keep)
+        .filter(F.col("ccos").isNotNull() & ~F.isnan("ccos"))
+        .groupBy("vec_id")
+        .agg(F.min(F.struct((-F.col("ccos")).alias("nc"), "c_id", *keep)).alias("b"))
+        .select("vec_id", F.col("b.c_id").alias("cluster"), *[F.col(f"b.{c}") for c in keep])
+    )
+
+
+def ivf_probes(
+    q: DataFrame, cent: DataFrame, depth: int, keep: tuple[str, ...] = ()
+) -> DataFrame:
+    """``(query_id, probe_cluster, prnk, *keep)`` — each query of ``q``
+    ``(query_id, qv)`` probes its ``depth`` best cells of ``cent`` by
+    rounded cosine, ties to the lower c_id. ``keep`` names columns of
+    ``q`` (or ``qnrm``) to carry through. Q·K rows, one window."""
+    q = q.withColumn("qnrm", norm(F.col("qv"))).filter(F.col("qnrm") != 0)
+    w = W.partitionBy("query_id").orderBy(F.desc("qcos"), "c_id")
+    return (
+        q.crossJoin(F.broadcast(_live_centroids(cent)))
+        .select("query_id", "c_id", _cell_cos("qv", "qnrm").alias("qcos"), *keep)
+        .withColumn("prnk", F.row_number().over(w))
+        .filter(F.col("prnk") <= depth)
+        .select("query_id", F.col("c_id").alias("probe_cluster"), "prnk", *keep)
+    )
+
+
+def _queries(emb: DataFrame) -> DataFrame:
+    """``(query_id, qv)`` — the N_QUERIES demo query vectors of ``emb``."""
+    return emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+
+
 @register("sim_topk_ivf", oracle=IVF_ORACLE, tags=("similarity", "llm", "approx"))
 def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style approximate top-k: a fixed coarse quantizer (16 fixed
@@ -139,97 +245,16 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("v")
     )
-    cent = emb.filter(
-        (F.col("vec_id") >= IVF_C_LO) & (F.col("vec_id") < IVF_C_HI)
-    ).select(F.col("vec_id").alias("c_id"), F.col("v").alias("c_emb"))
-    return _ivf_topk(emb, cent)
+    return _ivf_topk(emb, fixed_anchors(emb))
 
 
 def _ivf_topk(emb: DataFrame, cent: DataFrame) -> DataFrame:
     """IVF search given a centroid table ``(c_id, c_emb)``: assign every
     vector to its max-cosine centroid, probe each query's N_PROBE best
-    cells, exact re-rank inside the probed cells. Norms are precomputed
-    per vector/centroid below the joins (dedup_embedding_cosine's
-    pattern), so every pairwise stage folds only the dot —
-    bit-unchanged."""
-    emb = emb.withColumn("nrm", norm(F.col("v")))
-    # zero-norm / NULL centroids sit out entirely (cosine to them is
-    # undefined, and the probe/re-rank divisions below would be ANSI
-    # DIVIDE_BY_ZERO crashes otherwise); K-sized frame, free filter.
-    cent = cent.withColumn("cnrm", norm(F.col("c_emb"))).filter(
-        F.col("cnrm").isNotNull() & (F.col("cnrm") != 0)
-    )
-    # struct-min argmax (ccos desc via exact negation, ties to lower
-    # c_id) — map-side combinable, so each vector's K candidate rows
-    # collapse before any exchange instead of the old row_number window
-    # shuffling the corpus×K candidate frame; v/nrm ride in the struct
-    # tail (c_id is unique per group, so they never compare).
-    # NaN/NULL ordering asymmetry of the negation trick (ADVICE r08):
-    # desc(ccos) sorts NaN FIRST and NULL last (a 0/0 candidate would
-    # win), while min(struct(-ccos,…)) sorts NaN last and NULL first
-    # (a NULL would win) — so non-finite scores are excluded explicitly
-    # rather than left to either ordering. Two corrections from ADVICE
-    # r09 (both verified on this Spark): (1) under ANSI — this
-    # session's default — a zero-norm side throws DIVIDE_BY_ZERO at the
-    # division itself, so the zero case must be guarded BEFORE it can
-    # produce a NaN: the when() yields NULL there instead; (2)
-    # isnan(NULL) is false (not NULL), so ~isnan alone would PASS a
-    # NULL ccos straight into the min-struct where NULL-sorts-first
-    # makes it win — NULL needs its own isNotNull() filter. A zero-norm
-    # or NULL-embedding candidate is thereby dropped, keeping the
-    # argmax deterministic under both formulations.
-    clustered = (
-        emb.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            F.round(
-                F.when(
-                    F.col("nrm") * F.col("cnrm") != 0,
-                    dot(F.col("v"), F.col("c_emb")) / (F.col("nrm") * F.col("cnrm")),
-                ),
-                6,
-            ).alias("ccos"),
-            "c_id",
-            "v",
-            "nrm",
-        )
-        .filter(F.col("ccos").isNotNull() & ~F.isnan("ccos"))
-        .groupBy("vec_id")
-        .agg(
-            F.min(F.struct((-F.col("ccos")).alias("nc"), "c_id", "v", "nrm")).alias("b")
-        )
-        .select("vec_id", F.col("b.v").alias("v"), F.col("b.nrm").alias("nrm"),
-                F.col("b.c_id").alias("cluster"))
-    )
-    # a zero-norm / NULL query has no defined cosine ranking and would
-    # crash the probe division under ANSI — it sits out like a
-    # zero-norm candidate does (the r09 guard made assignment total;
-    # this makes the whole search total).
-    q = emb.filter(
-        (F.col("vec_id") < N_QUERIES)
-        & F.col("nrm").isNotNull()
-        & (F.col("nrm") != 0)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    w_probe = W.partitionBy("query_id").orderBy(F.desc("qcos"), "c_id")
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .select(
-            "query_id",
-            "qv",
-            "qnrm",
-            "c_id",
-            F.round(
-                dot(F.col("qv"), F.col("c_emb")) / (F.col("qnrm") * F.col("cnrm")), 6
-            ).alias("qcos"),
-        )
-        .withColumn("prnk", F.row_number().over(w_probe))
-        .filter(F.col("prnk") <= N_PROBE)
-        .select("query_id", "qv", "qnrm", F.col("c_id").alias("probe_cluster"))
-    )
+    cells, exact re-rank inside the probed cells. Zero-norm / NULL
+    vectors, queries and centroids sit out (:func:`ivf_cells`)."""
+    clustered = ivf_cells(emb, cent, keep=("v", "nrm"))
+    probes = ivf_probes(_queries(emb), cent, N_PROBE, keep=("qv", "qnrm"))
     cand = (
         clustered.join(
             F.broadcast(probes),
@@ -299,13 +324,7 @@ def train_ivf_centroids(emb: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
     # assignment gives it no members, so it carries forward inert.
     prev = {
         int(r["c_id"]): list(r["c_emb"])
-        for r in emb.filter(
-            (F.col("vec_id") >= IVF_C_LO)
-            & (F.col("vec_id") < IVF_C_HI)
-            & F.col("v").isNotNull()
-        )
-        .select(F.col("vec_id").alias("c_id"), F.col("v").alias("c_emb"))
-        .collect()
+        for r in fixed_anchors(emb).filter(F.col("c_emb").isNotNull()).collect()
     }
     # local_frame, not createDataFrame (r13): the per-round centroid
     # frame was an RDD leaf — every Lloyd round paid a pickle →
@@ -314,43 +333,11 @@ def train_ivf_centroids(emb: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
     # LocalRelation broadcasts directly.
     cent = local_frame(spark, sorted(prev.items()), "c_id int, c_emb array<double>")
     for _ in range(iters):
-        # struct-min assignment (ccos desc via exact negation, ties to
-        # lower c_id) — map-side combinable like the PQ trainer's, so
-        # each vector's K candidate rows collapse to one BEFORE any
-        # exchange; the old row_number window shuffled the corpus×K
-        # candidate frame with every candidate carrying the full
-        # 64-double vector. v rides in the struct tail (c_id is unique
-        # per group, so it never compares). Non-finite guard as in
-        # _ivf_topk (ADVICE r08/r09): the division is when()-guarded
-        # because ANSI mode (session default) throws DIVIDE_BY_ZERO on
-        # a zero norm before any filter could run, and the filter needs
-        # an explicit isNotNull() because isnan(NULL) is false — a bare
-        # ~isnan would pass a NULL ccos into min(struct) where
-        # NULL-sorts-first makes it win. A zero-norm or NULL vector has
-        # no defined cosine assignment and simply sits out the round.
-        assigned = (
-            emb.withColumn("nrm", norm(F.col("v")))
-            .crossJoin(F.broadcast(cent.withColumn("cnrm", norm(F.col("c_emb")))))
-            .select(
-                "vec_id",
-                F.round(
-                    F.when(
-                        F.col("nrm") * F.col("cnrm") != 0,
-                        dot(F.col("v"), F.col("c_emb"))
-                        / (F.col("nrm") * F.col("cnrm")),
-                    ),
-                    6,
-                ).alias("ccos"),
-                "c_id",
-                "v",
-            )
-            .filter(F.col("ccos").isNotNull() & ~F.isnan("ccos"))
-            .groupBy("vec_id")
-            .agg(F.min(F.struct((-F.col("ccos")).alias("nc"), "c_id", "v")).alias("b"))
-            .select("vec_id", F.col("b.c_id").alias("c_id"), F.col("b.v").alias("v"))
-        )
+        # v rides through the assignment to the per-cell means; a
+        # zero-norm or NULL vector sits out the round (ivf_cells)
         means = (
-            assigned.select("c_id", F.posexplode("v").alias("dim", "val"))
+            ivf_cells(emb, cent, keep=("v",))
+            .select(F.col("cluster").alias("c_id"), F.posexplode("v").alias("dim", "val"))
             .groupBy("c_id", "dim")
             .agg(mean_e12("val").alias("m"))
         )
@@ -531,17 +518,10 @@ N_PLANES = 6  # 64 buckets
 
 
 def _plane_weights(spark: SparkSession):
-    """Deterministic pseudo-random hyperplanes: weight(p, d) derived from
-    md5 — reproducible across runs/engines, no RNG state to ship."""
-    rows = []
-    import hashlib
-
-    for p in range(N_PLANES):
-        w = []
-        for d in range(64):
-            h = int(hashlib.md5(f"{p}_{d}".encode()).hexdigest()[:15], 16)
-            w.append((h % 2001 - 1000) / 1000.0)
-        rows.append((p, w))
+    """Deterministic pseudo-random hyperplanes: plane p's weights are
+    ``md5_plane(str(p))`` — reproducible across runs/engines, no RNG
+    state to ship."""
+    rows = [(p, md5_plane(str(p))) for p in range(N_PLANES)]
     # VALUES-literal LocalRelation, not an RDD leaf (r13 — the r12
     # flagship plane-bank recipe, shared helper): the constant bank
     # broadcast no longer pays an RDD scan + pickle round-trip.
@@ -556,16 +536,10 @@ def _lsh_oracle() -> str:
     probes, candidates and the re-ranked top-k all hash-match — an
     APPROXIMATE operator with an EXACT oracle, because every source of
     randomness is deterministic and engine-independent."""
-    import hashlib
-
-    rows = []
-    for p in range(N_PLANES):
-        w = []
-        for d in range(64):
-            h = int(hashlib.md5(f"{p}_{d}".encode()).hexdigest()[:15], 16)
-            w.append(repr((h % 2001 - 1000) / 1000.0))
-        rows.append(f"({p}, [{', '.join(w)}]::DOUBLE[])")
-    planes = ",\n    ".join(rows)
+    planes = ",\n    ".join(
+        f"({p}, [{', '.join(map(repr, md5_plane(str(p))))}]::DOUBLE[])"
+        for p in range(N_PLANES)
+    )
     probe_list = ", ".join(["qb"] + [f"xor(qb, {1 << p})" for p in range(N_PLANES)])
     return f"""
 WITH planes(plane, w) AS (VALUES
@@ -840,9 +814,7 @@ def _pq_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("v")
     )
-    anchors = emb.filter(
-        (F.col("vec_id") >= IVF_C_LO) & (F.col("vec_id") < IVF_C_HI)
-    ).select((F.col("vec_id") - IVF_C_LO).alias("k"), F.col("v").alias("a"))
+    anchors = fixed_anchors(emb).select("k", F.col("c_emb").alias("a"))
     m = spark.range(PQ_M).select(F.col("id").cast("int").alias("m"))
     subdist = F.expr(_pq_subdist("v", "a", _SPARK_ELEM))
     d = (
@@ -950,16 +922,11 @@ def _pq_query_lut(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("v")
     )
-    anchors = emb.filter(
-        (F.col("vec_id") >= IVF_C_LO) & (F.col("vec_id") < IVF_C_HI)
-    ).select((F.col("vec_id") - IVF_C_LO).alias("k"), F.col("v").alias("a"))
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "v"
-    )
+    anchors = fixed_anchors(emb).select("k", F.col("c_emb").alias("a"))
     m = spark.range(PQ_M).select(F.col("id").cast("int").alias("m"))
-    subdist = F.expr(_pq_subdist("v", "a", _SPARK_ELEM))
+    subdist = F.expr(_pq_subdist("qv", "a", _SPARK_ELEM))
     return (
-        q.crossJoin(F.broadcast(m))
+        _queries(emb).crossJoin(F.broadcast(m))
         .crossJoin(F.broadcast(anchors))
         .select("query_id", "m", "k", subdist.alias("d_e6"))
     )
@@ -1033,9 +1000,7 @@ def sim_topk_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("v")
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    q = _queries(emb)
     rescored = (
         shortlist.join(emb, F.col("neighbor_id") == F.col("vec_id"))
         .join(F.broadcast(q), "query_id")
@@ -1141,51 +1106,14 @@ def sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivfpq_adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(query_id, neighbor_id, adc_dist_e6)`` over probed cells only
     — the IVF-restricted ADC scan shared by sim_topk_ivfpq and its
-    re-ranked variant."""
+    re-ranked variant. Zero-norm / NULL vectors and queries sit out
+    (:func:`ivf_cells`)."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("v")
     )
-    cent = emb.filter(
-        (F.col("vec_id") >= IVF_C_LO) & (F.col("vec_id") < IVF_C_HI)
-    ).select(F.col("vec_id").alias("c_id"), F.col("v").alias("c_emb"))
-    # cell assignment as a partial-aggregable struct-max (ccos desc,
-    # c_id asc tie-break via negated id) — combined map-side, no window
-    # sort of the N·K candidate frame.
-    emb = emb.withColumn("nrm", norm(F.col("v")))
-    cent = cent.withColumn("cnrm", norm(F.col("c_emb")))
-    clustered = (
-        emb.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            F.round(
-                dot(F.col("v"), F.col("c_emb")) / (F.col("nrm") * F.col("cnrm")), 6
-            ).alias("ccos"),
-            F.col("c_id"),
-        )
-        .groupBy("vec_id")
-        .agg(F.max(F.struct(F.col("ccos"), (-F.col("c_id")).alias("nc"))).alias("b"))
-        .select("vec_id", (-F.col("b.nc")).alias("cluster"))
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    w_probe = W.partitionBy("query_id").orderBy(F.desc("qcos"), "c_id")
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .select(
-            "query_id",
-            F.round(
-                dot(F.col("qv"), F.col("c_emb")) / (F.col("qnrm") * F.col("cnrm")),
-                6,
-            ).alias("qcos"),
-            "c_id",
-        )
-        .withColumn("prnk", F.row_number().over(w_probe))
-        .filter(F.col("prnk") <= N_PROBE)
-        .select("query_id", F.col("c_id").alias("probe_cluster"))
-    )
+    cent = fixed_anchors(emb)
+    clustered = ivf_cells(emb, cent)
+    probes = ivf_probes(_queries(emb), cent, N_PROBE)
     # (vec, m, k, cluster): codes + cell in one vec_id-keyed join — the
     # materialized index layout. Probe restriction is a broadcast join
     # on cluster (Q·N_PROBE rows), then the ADC LUT lookup.
@@ -1243,16 +1171,14 @@ def train_pq_codebooks(emb: DataFrame, iters: int = PQ_KMEANS_ITERS) -> DataFram
     At 100 TB you train on a sample, exactly as FAISS does — the
     procedure is unchanged."""
     spark = emb.sparkSession
-    anchors = emb.filter(
-        (F.col("vec_id") >= IVF_C_LO) & (F.col("vec_id") < IVF_C_HI)
-    ).select((F.col("vec_id") - IVF_C_LO).alias("k"), F.col("v").alias("v"))
+    anchors = fixed_anchors(emb).select(F.col("k").alias("vec_id"), F.col("c_emb").alias("v"))
     # one corpus hop for the anchor subvectors; thereafter the M·K
     # codebook lives in this driver dict (the old shape re-collected
     # the codebook frame it had just built from the same dict — an
     # extra job per round, and in round 1 a second anchor-filter scan).
     prev = {
         (int(r["m"]), int(r["k"])): list(r["a"])
-        for r in _pq_subvectors(anchors.withColumnRenamed("k", "vec_id"))
+        for r in _pq_subvectors(anchors)
         .select("m", F.col("vec_id").alias("k"), F.col("sv").alias("a"))
         .collect()
     }
@@ -2105,9 +2031,7 @@ def sim_topk_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("v")
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    q = _queries(emb)
     sq = F.zip_with(F.col("qv"), F.col("v"), lambda x, y: (x - y) * (x - y))
     d_e6 = F.round(
         F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x) * 1_000_000
@@ -2523,9 +2447,7 @@ def sim_topk_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("v")
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    q = _queries(emb)
     w = W.partitionBy("query_id").orderBy("adc_dist_e6", "neighbor_id")
     shortlist = (
         adc.select("*", F.row_number().over(w).alias("srnk"))
@@ -2963,44 +2885,10 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("v")
     )
-    cent = emb.filter(
-        (F.col("vec_id") >= IVF_C_LO) & (F.col("vec_id") < IVF_C_HI)
-    ).select(F.col("vec_id").alias("c_id"), F.col("v").alias("c_emb"))
+    cent = fixed_anchors(emb)
+    clustered = ivf_cells(emb, cent)
+    probes = ivf_probes(_queries(emb), cent, NPROBE_MAX)
     emb = emb.withColumn("nrm", norm(F.col("v")))
-    cent = cent.withColumn("cnrm", norm(F.col("c_emb")))
-    clustered = (
-        emb.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            F.round(
-                dot(F.col("v"), F.col("c_emb")) / (F.col("nrm") * F.col("cnrm")), 6
-            ).alias("ccos"),
-            "c_id",
-        )
-        .groupBy("vec_id")
-        .agg(F.max(F.struct(F.col("ccos"), (-F.col("c_id")).alias("nc"))).alias("b"))
-        .select("vec_id", (-F.col("b.nc")).alias("cluster"))
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    w_probe = W.partitionBy("query_id").orderBy(F.desc("qcos"), "c_id")
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .select(
-            "query_id",
-            F.round(
-                dot(F.col("qv"), F.col("c_emb")) / (F.col("qnrm") * F.col("cnrm")),
-                6,
-            ).alias("qcos"),
-            "c_id",
-        )
-        .withColumn("prnk", F.row_number().over(w_probe))
-        .filter(F.col("prnk") <= NPROBE_MAX)
-        .select("query_id", F.col("c_id").alias("probe_cluster"), "prnk")
-    )
     ps = spark.range(1, NPROBE_MAX + 1).select(F.col("id").cast("int").alias("np"))
     cand = (
         clustered.join(
@@ -3132,12 +3020,9 @@ def emb_farthest_point_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", as_double("embedding").alias("v")
     )
     emb = emb.transform(pin)  # scanned once per round
-    subdist = " + ".join(
-        f"(element_at(v, {j}) - element_at(sv, {j}))"
-        f" * (element_at(v, {j}) - element_at(sv, {j}))"
-        for j in range(1, 65)
-    )
-    d_e6 = F.expr(f"CAST(ROUND(({subdist}) * 1000000) AS BIGINT)")
+    # the fold equals the oracle's unrolled 64-term sum bit for bit
+    # (0.0 + t1 == t1 for t1 >= 0) and runs faster (functions/vectors.py)
+    d_e6 = _l2_e6(F.col("v"), F.col("sv"))
     seeds = emb.filter(F.col("vec_id") == IVF_C_LO).select(
         "vec_id", F.col("v").alias("sv")
     )
@@ -3317,9 +3202,7 @@ def sim_rerank_depth_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("v")
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    q = _queries(emb)
     ds = local_frame(spark, [(d,) for d in RERANK_DEPTHS], "depth int")
     resc = (
         shortlist.join(emb, F.col("neighbor_id") == F.col("vec_id"))
@@ -3362,15 +3245,6 @@ def sim_rerank_depth_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 KM_K = 8
 KM_C_LO, KM_C_HI = 8, 8 + KM_K  # fixed seed vectors (disjoint from queries)
 EMB_DIM = 64
-
-
-def _sq_l2(a, b):
-    """Sequential-fold squared L2 distance (order-deterministic)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def _sq_l2_sql(a: str, b: str) -> str:
@@ -3435,7 +3309,7 @@ def emb_kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.filter(
         (F.col("vec_id") >= KM_C_LO) & (F.col("vec_id") < KM_C_HI)
     ).select(F.col("vec_id").alias("c_id"), F.col("v").alias("c_emb"))
-    d2 = F.round(_sq_l2(F.col("v"), F.col("c_emb")) * 1_000_000).cast("long")
+    d2 = _l2_e6(F.col("v"), F.col("c_emb"))
     # struct-min argmin (d2 asc, c_id asc) — map-side combinable, so
     # each vector's K candidate rows collapse before any exchange; the
     # old row_number window shuffled the corpus×K candidate frame,

@@ -18,6 +18,10 @@ alone passes NULLs; a NULL struct field sorts FIRST and therefore WINS
    explicit ``isNotNull`` filter; queries and centroids got the same
    sit-out treatment (the probe/re-rank divisions crash identically).
 3. ``train_ivf_centroids`` had the same assignment pattern — same fix.
+4. The IVF-PQ scan and the nprobe sweep kept their own unguarded
+   copies of the quantizer, and the exact baseline divided by a zero
+   norm too. All IVF paths now share ``ivf_cells`` / ``ivf_probes``,
+   and ``sim_topk_bruteforce`` skips zero-norm and NULL vectors.
 """
 
 from __future__ import annotations
@@ -94,10 +98,65 @@ def test_train_ivf_centroids_zero_norm_sits_out(spark):
     assert by_id[8][0] == 0.75  # mean of vecs 8 and 9 only
 
 
+ZERO_IDS = {3, 30}  # one query (vec_id < N_QUERIES), one corpus vector
+NULL_IDS = {24, 27, 33}
+
+
+def _degenerate_corpus(tmp_path) -> str:
+    """The sf0.001 embeddings with ZERO_IDS set to the zero vector and
+    NULL_IDS to a NULL embedding; returns the sf_dir to read it from."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.conftest import SF_SMOKE
+
+    t = pq.read_table(os.path.join(SF_SMOKE, "embeddings.parquet"))
+    rows = t.to_pylist()
+    for r in rows:
+        if r["vec_id"] in ZERO_IDS:
+            r["embedding"] = [0.0] * len(r["embedding"])
+        elif r["vec_id"] in NULL_IDS:
+            r["embedding"] = None
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=t.schema),
+        os.path.join(str(tmp_path), "embeddings.parquet"),
+    )
+    return str(tmp_path)
+
+
+def test_every_ivf_path_lets_zero_norm_and_null_vectors_sit_out(spark, tmp_path):
+    # Every IVF path assigns cells through similarity.ivf_cells and
+    # ranks probes through similarity.ivf_probes, so the guards of
+    # _ivf_topk above hold for the IVF-PQ scan and the nprobe sweep too,
+    # and the exact side (sim_topk_bruteforce) skips the same vectors.
+    # Before, a zero vector crashed these four queries with ANSI
+    # DIVIDE_BY_ZERO, and the unguarded struct-max put every NULL
+    # vector into the first cell, where the ADC scan scored it.
+    sf = _degenerate_corpus(tmp_path)
+    bad = ZERO_IDS | NULL_IDS
+    adc = similarity._ivfpq_adc_scored(spark, sf).collect()
+    assert adc
+    assert not {r["neighbor_id"] for r in adc} & bad
+    assert not {r["query_id"] for r in adc} & bad
+    exact = similarity.sim_topk_bruteforce(spark, sf).collect()
+    assert not {r["neighbor_id"] for r in exact} & bad
+    for fn in (
+        similarity.sim_topk_bruteforce,
+        similarity.sim_topk_ivfpq,
+        similarity.sim_topk_ivfpq_rerank,
+        similarity.sim_ivf_recall_eval,
+    ):
+        qids = {r["query_id"] for r in fn(spark, sf).collect()}
+        assert qids == set(range(similarity.N_QUERIES)) - bad, fn.__name__
+    sweep = similarity.sim_ivf_nprobe_sweep(spark, sf).collect()
+    assert sorted(r["np"] for r in sweep) == list(range(1, similarity.NPROBE_MAX + 1))
+
+
 def test_isnan_null_semantics_still_hold(spark):
     # The guards above are correct ONLY under these engine semantics;
     # if a Spark upgrade changes them, this canary points at the spots
-    # to re-audit (similarity._ivf_topk / train_ivf_centroids).
+    # to re-audit (similarity.ivf_cells / ivf_probes, the coarse
+    # quantizer every IVF path shares).
     row = spark.range(1).select(
         F.isnan(F.lit(None).cast("double")).alias("isnan_null"),
     ).first()
