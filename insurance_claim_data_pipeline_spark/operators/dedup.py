@@ -349,7 +349,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 SIMHASH_BITS = 60
-SIMHASH_BAND_BITS = 15  # historical fixture config: 4 bands of 15 bits
 HAMMING_MAX = 3
 
 # Sized banding dial (VERDICT r10 #1, the fixed-bank law applied): each

@@ -359,7 +359,6 @@ def sample_temporal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- systematic weighted sampling ---------------------------------------
 _SYS_K = 200  # target sample size
-_SYS_BKT = 16  # md5-prefix buckets for the two-level prefix sum
 
 SYSTEMATIC_WEIGHTED_ORACLE = f"""
 WITH w AS (

@@ -801,10 +801,11 @@ GROUP BY vec_id
 
 def _pq_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(vec_id, m, k, dist_e6)`` — nearest codebook entry per
-    (vector, subspace), ties to lower k. Lexicographic struct-min ==
-    the (dist_e6 asc, k asc) window top-1, but as a partial-aggregable
-    MIN: the N·M·K candidate frame is combined map-side to N·M rows
-    BEFORE any exchange — no sort, no shuffle of the expanded frame
+    (vector, subspace), ties to lower k, NULL distances last.
+    Lexicographic struct-min == the (dist_e6 asc nulls last, k asc)
+    window top-1, but as a partial-aggregable MIN: the N·M·K
+    candidate frame is combined map-side to N·M rows BEFORE any
+    exchange — no sort, no shuffle of the expanded frame
     (the window formulation this replaced sorted it). A fully map-only
     rewrite via transform/array_min higher-order functions was measured
     2x SLOWER — HOF lambdas evaluate interpreted, outside whole-stage
@@ -822,9 +823,13 @@ def _pq_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(anchors))
         .select("vec_id", "m", "k", subdist.alias("dist_e6"))
     )
+    # A NULL field sorts first in a struct min, so a NULL anchor's NULL
+    # distance would win; the leading IS NULL flag puts it last, as the
+    # oracle's ORDER BY dist_e6 (NULLS LAST) does.
+    best = F.struct(F.col("dist_e6").isNull().alias("d_null"), "dist_e6", "k")
     return (
         d.groupBy("vec_id", "m")
-        .agg(F.min(F.struct("dist_e6", "k")).alias("b"))
+        .agg(F.min(best).alias("b"))
         .select("vec_id", "m", F.col("b.k").alias("k"), F.col("b.dist_e6").alias("dist_e6"))
     )
 
@@ -2039,7 +2044,9 @@ def sim_topk_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = emb.join(F.broadcast(q), F.col("query_id") != F.col("vec_id")).select(
         "query_id", F.col("vec_id").alias("neighbor_id"), d_e6.alias("dist_e6")
     )
-    w = W.partitionBy("query_id").orderBy("dist_e6", "neighbor_id")
+    # NULLS LAST, as in the oracle: a NULL vector's NULL distance ranks
+    # after every real neighbour instead of taking the top ranks.
+    w = W.partitionBy("query_id").orderBy(F.asc_nulls_last("dist_e6"), "neighbor_id")
     return (
         scored.select("*", F.row_number().over(w).cast("long").alias("rnk"))
         .filter(F.col("rnk") <= TOP_K)

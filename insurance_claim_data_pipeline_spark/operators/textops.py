@@ -2378,7 +2378,6 @@ def text_ctfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Kneser-Ney smoothed bigram model (absolute discounting + continuation)
 # ---------------------------------------------------------------------------
 
-KN_DISCOUNT_E2 = 75  # D = 0.75 in hundredths (exact in binary: 0.75)
 KN_TOPK = 200
 
 KN_ORACLE = f"""
@@ -2487,8 +2486,6 @@ def text_kneser_ney_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # LLM-watermark (greenlist bias) detector
 # ---------------------------------------------------------------------------
-
-WM_Z_FLAG_E6 = 4_000_000  # z > 4 → flagged as likely watermarked
 
 WATERMARK_ORACLE = """
 WITH tok AS (

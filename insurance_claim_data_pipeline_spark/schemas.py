@@ -51,13 +51,3 @@ BETA_RAW_SCHEMA = T.StructType(
         T.StructField("status", T.StringType(), True),
     ]
 )
-
-# Candidate (sink) schema — claim_pipeline.py:194-199.
-CANDIDATE_SCHEMA = T.StructType(
-    [
-        T.StructField("claim_id", T.StringType(), True),
-        T.StructField("resubmission_reason", T.StringType(), True),
-        T.StructField("source_system", T.StringType(), True),
-        T.StructField("recommended_changes", T.StringType(), True),
-    ]
-)

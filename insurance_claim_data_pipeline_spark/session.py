@@ -31,6 +31,24 @@ master/memory knobs which belong to spark-submit there:
   of ``SESSION_CONFS``, and on an external session spark-submit owns
   it. PySpark reads it once per process, at the first Column built
   under an active session.
+- ICU case mappings off (``spark.sql.icu.caseMappings.enabled=false``),
+  so ``lower``/``upper`` run ``UTF8String.toLowerCase``/``toUpperCase``
+  (``java.lang.String`` case mapping) instead of ICU4J. The first ICU
+  call in a JVM builds a title-case table over all 1,114,112 code
+  points, a new word ``BreakIterator`` per code point: on the claims
+  pipeline about 3.1 GB of allocation, 16 extra young GCs and about
+  3 s of a 6-8 s cold pass. ASCII strings take the same fast path
+  either way. What is lost: non-ASCII strings use the JDK's Unicode
+  tables (Unicode 13 in JDK 17) instead of ICU4J 77's (Unicode 16), so
+  a letter whose case pair came later, such as Glagolitic ``Ⱟ``
+  (U+2C2F, Unicode 14), keeps its case where ICU and Python 3.11 map
+  it. Both paths follow the JVM default locale for non-ASCII strings
+  (checked under ``tr_TR``: identical output), so under a ``tr``/``az``
+  default locale an ``I`` inside a non-ASCII string lowercases to
+  dotless ``ı`` with or without ICU; executors that must match
+  Python's ``str.lower`` need ``-Duser.language=en``. A runtime SQL
+  conf, so it is in ``SESSION_CONFS`` and ``configure()`` applies it
+  too.
 """
 
 from __future__ import annotations
@@ -39,8 +57,6 @@ import os
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def tiny_frame_key(col_name: str):
@@ -256,6 +272,13 @@ SESSION_CONFS = {
     # et al. working without a per-column cast; normalize_timestamps
     # remains the fallback for sessions where this conf is locked.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # lower/upper without ICU, whose first call in a JVM builds a
+    # title-case table over every code point (module docstring). What is
+    # lost: non-ASCII strings map case by the JDK's Unicode tables
+    # (Unicode 13 in JDK 17), not ICU's (16), so a letter paired after
+    # Unicode 13, e.g. U+2C2F, keeps its case. Either way the JVM default
+    # locale applies: tr/az executors need -Duser.language=en.
+    "spark.sql.icu.caseMappings.enabled": "false",
 }
 
 

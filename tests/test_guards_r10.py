@@ -22,6 +22,10 @@ alone passes NULLs; a NULL struct field sorts FIRST and therefore WINS
    copies of the quantizer, and the exact baseline divided by a zero
    norm too. All IVF paths now share ``ivf_cells`` / ``ivf_probes``,
    and ``sim_topk_bruteforce`` skips zero-norm and NULL vectors.
+5. ``sim_topk_l2``'s window and ``_pq_best``'s struct min sorted NULL
+   distances first, so a NULL vector ranked as the nearest neighbour
+   and a NULL anchor won the PQ code; both now put NULLs last, as
+   their DuckDB oracles do.
 """
 
 from __future__ import annotations
@@ -33,6 +37,8 @@ import pyspark.sql.functions as F
 
 from insurance_claim_data_pipeline_spark.operators import similarity
 from insurance_claim_data_pipeline_spark.operators.graph import graph_link_prediction
+
+from .oracle_utils import run_parity
 
 
 def test_link_prediction_survives_degree_one_nodes(spark, tmp_path):
@@ -102,20 +108,25 @@ ZERO_IDS = {3, 30}  # one query (vec_id < N_QUERIES), one corpus vector
 NULL_IDS = {24, 27, 33}
 
 
-def _degenerate_corpus(tmp_path) -> str:
-    """The sf0.001 embeddings with ZERO_IDS set to the zero vector and
-    NULL_IDS to a NULL embedding; returns the sf_dir to read it from."""
+def _degenerate_corpus(tmp_path, zero_ids=ZERO_IDS, null_ids=NULL_IDS) -> str:
+    """The sf0.001 embeddings with ``zero_ids`` set to the zero vector
+    and ``null_ids`` to a NULL embedding, next to links to the other
+    sf0.001 tables (the oracle connection opens them all); returns the
+    sf_dir to read it from."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from tests.conftest import SF_SMOKE
 
+    for name in os.listdir(SF_SMOKE):
+        if name.endswith(".parquet") and name != "embeddings.parquet":
+            os.symlink(os.path.join(SF_SMOKE, name), os.path.join(str(tmp_path), name))
     t = pq.read_table(os.path.join(SF_SMOKE, "embeddings.parquet"))
     rows = t.to_pylist()
     for r in rows:
-        if r["vec_id"] in ZERO_IDS:
+        if r["vec_id"] in zero_ids:
             r["embedding"] = [0.0] * len(r["embedding"])
-        elif r["vec_id"] in NULL_IDS:
+        elif r["vec_id"] in null_ids:
             r["embedding"] = None
     pq.write_table(
         pa.Table.from_pylist(rows, schema=t.schema),
@@ -150,6 +161,27 @@ def test_every_ivf_path_lets_zero_norm_and_null_vectors_sit_out(spark, tmp_path)
         assert qids == set(range(similarity.N_QUERIES)) - bad, fn.__name__
     sweep = similarity.sim_ivf_nprobe_sweep(spark, sf).collect()
     assert sorted(r["np"] for r in sweep) == list(range(1, similarity.NPROBE_MAX + 1))
+
+
+def test_l2_topk_ranks_null_vectors_last(spark, tmp_path):
+    # The NULL corpus vectors have NULL distances; the oracle ranks
+    # them last (DuckDB's ORDER BY default), where Spark's ascending
+    # default put them first and returned them as the top neighbours.
+    sf = _degenerate_corpus(tmp_path)
+    problems = run_parity(spark, sf, "sim_topk_l2", similarity.sim_topk_l2, similarity.L2_ORACLE)
+    assert not problems, "\n".join(problems)
+
+
+def test_pq_encode_never_picks_a_null_anchor(spark, tmp_path):
+    # Anchor vec 10 (PQ code 2) is NULL, so all its subspace distances
+    # are NULL. A NULL field sorts first in a struct min, where it once
+    # won 7,984 of the 8,000 (vector, subspace) cells; the oracle sorts
+    # it last.
+    sf = _degenerate_corpus(tmp_path, zero_ids=set(), null_ids={10})
+    problems = run_parity(
+        spark, sf, "emb_pq_encode", similarity.emb_pq_encode, similarity._pq_encode_oracle()
+    )
+    assert not problems, "\n".join(problems)
 
 
 def test_isnan_null_semantics_still_hold(spark):

@@ -5,7 +5,8 @@ fixture values. Each example batch becomes one small Spark job.
 
 Scope note: the reference's str.strip() also strips unicode whitespace;
 the engine (and these models) pin ASCII whitespace — generating ASCII
-keeps the property honest about what is actually promised.
+keeps the property honest about what is actually promised. Case
+mapping alone is also pinned on a fixed non-ASCII list.
 """
 
 from __future__ import annotations
@@ -77,6 +78,25 @@ def test_trim_null_matches_python_strip(spark, values):
 @given(values=f1_inputs)
 def test_lower_norm_matches_model(spark, values):
     assert _run(spark, values, lower_norm) == [model_lower(v) for v in values]
+
+
+# Non-ASCII case mapping: final sigma, German sharp s, dotted capital I,
+# titlecase digraphs, ligatures, a supplementary-plane letter and the
+# Angstrom/Kelvin/Ohm signs. Outside ASCII, Spark's lower/upper without
+# ICU use the JVM's String case mapping, which must match Python's for
+# every case pair both Unicode versions know (the JDK's, 13 in JDK 17,
+# is older than Python's).
+NON_ASCII = [
+    "ΟΔΟΣ", "ΑΣ ΑΣΑ Σ", "Straße", "ẞ", "İstanbul", "DİYARBAKIR",
+    "ǅ ǈ ǋ", "ﬁ ﬀ", "ŉ", "𐐀𐐨", "Å K Ω",
+]
+
+
+def test_non_ascii_case_mapping_matches_python(spark):
+    assert _run(spark, NON_ASCII, F.lower) == [s.lower() for s in NON_ASCII]
+    assert _run(spark, NON_ASCII, F.upper) == [s.upper() for s in NON_ASCII]
+    assert _run(spark, NON_ASCII, lower_norm) == [model_lower(s) for s in NON_ASCII]
+    assert [model_lower(s) for s in NON_ASCII] == [s.lower() for s in NON_ASCII]
 
 
 @settings(max_examples=12, deadline=None)

@@ -10,8 +10,9 @@ same pins through ``DataFrame.checkpoint`` (checkpoint-dir blocks,
 recoverable) for real multi-executor deployments.
 
 Also here: the session conf block get_spark and configure share, the
-Tungsten page size and call-site-capture switch get_spark sets, and
-the one conf error load_table tolerates.
+ICU-free lower/upper it selects, the Tungsten page size and
+call-site-capture switch get_spark sets, and the one conf error
+load_table tolerates.
 """
 
 from __future__ import annotations
@@ -203,6 +204,36 @@ def test_session_confs_read_back_after_configure(spark):
     session.configure(spark)
     for key, value in session.SESSION_CONFS.items():
         assert spark.conf.get(key) == value, key
+
+
+ICU_CONF = "spark.sql.icu.caseMappings.enabled"
+CASE_CODEGEN = (
+    "EXPLAIN CODEGEN SELECT lower(cast(id AS string)), "
+    "upper(cast(id AS string)) FROM range(3)"
+)
+
+
+def _assert_case_mapping_without_icu(spark):
+    assert spark.conf.get(ICU_CONF) == "false"
+    code = spark.sql(CASE_CODEGEN).first()[0]
+    assert "CollationSupport.Lower.execBinary(" in code
+    assert "CollationSupport.Upper.execBinary(" in code
+    assert "execBinaryICU" not in code
+
+
+def test_get_spark_case_mapping_skips_icu(spark):
+    """lower/upper must not reach ICU, whose first call in a JVM builds
+    a title-case table over every code point (gigabytes of allocation
+    on the claims cold pass)."""
+    _assert_case_mapping_without_icu(spark)
+
+
+def test_configure_case_mapping_skips_icu(spark):
+    # A plain session runs Spark's default, ICU; configure() turns it off.
+    plain = spark.newSession()
+    plain.conf.unset(ICU_CONF)
+    assert "execBinaryICU" in plain.sql(CASE_CODEGEN).first()[0]
+    _assert_case_mapping_without_icu(session.configure(plain))
 
 
 def test_tungsten_pages_are_small_and_address_the_heap(spark):
