@@ -8,13 +8,19 @@ order. IEEE double ops are exact given identical inputs and order, so
 Spark's ``aggregate`` and DuckDB's ``list_reduce`` produce bit-identical
 dot products — which is what lets cosine similarity be oracle-checked
 at full precision (outputs still rounded to 6 dp for belt-and-braces).
+
+Every cosine in the engine is two steps: :func:`live` folds each
+vector's norm once where the vectors enter and drops the zero and NULL
+ones (their cosine is undefined, and under ANSI the division throws
+DIVIDE_BY_ZERO), then :func:`pair_cos` divides each pair's dot by the
+two precomputed norms. There is no unguarded one-shot cosine.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -43,23 +49,8 @@ def dot_float(a: Column, b: Column) -> Column:
     element to double inside the fold. Bit-identical to
     ``dot(as_double(a), as_double(b))`` — float→double is exact and the
     multiply/accumulate order is unchanged — but the operands stay
-    4-byte floats until the fold touches them.
-
-    When to use which (A/B-measured at sf0.1, semantic-LSH refine):
-
-    - PAIR EQUI-JOINS (candidate ids join vectors from both sides, the
-      joined rows materialize between operators): ``dot_float`` — the
-      pair frame carries half the bytes, and the per-element cast runs
-      once per pair either way since nothing upstream could share it.
-      Refine stage 16.4 → 13.1 s (−20%) on the same loaded machine.
-    - BROADCAST Q×N SCANS / nested-loop pair scans (one corpus row
-      feeds MANY pairs): keep ``as_double`` once per row + ``dot`` —
-      there the pre-cast is amortized across Q folds, and re-casting
-      per pair would ADD work instead of removing bytes. Measured on
-      the brute-force cosine BNLJ at sf0.1: double 24.0 s vs float
-      27.9 s (−14% from switching BACK to as_double) — nothing
-      materializes between nested-loop probes, so the cast is pure
-      added per-pair CPU there."""
+    4-byte floats until the fold touches them. :func:`pair_cos` says
+    when to use it."""
     return _fold_dot(a, b, lambda x, y: x.cast("double") * y.cast("double"))
 
 
@@ -67,8 +58,40 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+def live(df: DataFrame, v: Column | str = "v") -> DataFrame:
+    """``df`` plus ``nrm`` = ‖v‖ (one :func:`norm` fold per row),
+    keeping only the rows with ``nrm != 0``. A zero or NULL vector has
+    no cosine, so it sits out as a query and as a neighbour; ``NULL !=
+    0`` is NULL, so NULL vectors drop too. Apply it where the vectors
+    enter a cosine path, before any split into queries and corpus."""
+    v = F.col(v) if isinstance(v, str) else v
+    return df.withColumn("nrm", norm(v)).filter(F.col("nrm") != 0)
+
+
+def pair_cos(a: str, b: str, a_nrm: str, b_nrm: str, fold=dot) -> Column:
+    """Rounded cosine ``round(fold(a, b) / (a_nrm · b_nrm), 6)`` of two
+    vector columns whose norms :func:`live` folded once per vector, so
+    the pair stage folds only the dot — 1/3 of the per-pair fold work,
+    bit-identical to folding all three per pair.
+
+    ``fold`` is :func:`dot` or :func:`dot_float` (A/B-measured at
+    sf0.1, semantic-LSH refine):
+
+    - PAIR EQUI-JOINS (candidate ids join vectors from both sides, the
+      joined rows materialize between operators): ``dot_float`` over the
+      raw float arrays — the pair frame carries half the bytes, and the
+      per-element cast runs once per pair either way since nothing
+      upstream could share it. Refine stage 16.4 → 13.1 s (−20%) on the
+      same loaded machine.
+    - BROADCAST Q×N SCANS / nested-loop pair scans (one corpus row
+      feeds MANY pairs): ``as_double`` once per row + ``dot`` — there
+      the pre-cast is amortized across Q folds, and re-casting per pair
+      would ADD work instead of removing bytes. Measured on the
+      brute-force cosine BNLJ at sf0.1: double 24.0 s vs float 27.9 s
+      (−14% from switching BACK to as_double) — nothing materializes
+      between nested-loop probes, so the cast is pure added per-pair
+      CPU there."""
+    return F.round(fold(F.col(a), F.col(b)) / (F.col(a_nrm) * F.col(b_nrm)), 6)
 
 
 # Rejected alternative (measured r5, kept as a note so it isn't re-tried):

@@ -37,7 +37,9 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.text import shingle_rows, shingles_sql, tokens
-from ..functions.vectors import as_double, cosine_sql, dot, dot_float, dot_sql, md5_plane, norm
+from ..functions.vectors import (
+    as_double, cosine_sql, dot, dot_float, dot_sql, live, md5_plane, norm, pair_cos,
+)
 from ..registry import register
 from ..session import (
     is_pinned,
@@ -780,21 +782,16 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`semantic_lsh_candidate_pairs` (banded random-hyperplane
     buckets, equi-join candidates, recall-gated against this query).
     Threshold filters on the ROUNDED value in both engines so the
-    boundary decision is identical.
-
-    Norms are precomputed per VECTOR (O(n) fold work) rather than per
-    pair — the O(n²) stage evaluates only the pairwise dot, cutting 2/3
-    of the per-pair expression cost; ``norm(a)·norm(b)`` multiplies the
-    identical doubles, so the result is bit-unchanged."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
+    boundary decision is identical. Zero-norm and NULL vectors have no
+    cosine and sit out (``functions.vectors.live``)."""
+    emb = live(
+        load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", as_double("embedding").alias("v")
+        )
     )
-    emb = emb.select("vec_id", "v", norm(F.col("v")).alias("nrm"))
     a = emb.alias("a")
     b = emb.alias("b")
-    cos = F.round(
-        dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm")), 6
-    )
+    cos = pair_cos("a.v", "b.v", "a.nrm", "b.nrm")
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
@@ -1990,7 +1987,7 @@ def semantic_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``(band, code)`` — never a non-equi pair join, so the plan is a
     shuffled hash/sort-merge join on small integer keys whose output is
     bounded by bucket co-occupancy, not n². The exact cosine filter then
-    reuses dedup_embedding_cosine's precomputed-norm expression
+    scores pairs with the same ``pair_cos`` as dedup_embedding_cosine,
     bit-for-bit, so surviving pairs carry identical similarity decisions.
 
     Recall/pruning regime (measured on the synthetic fixture, see
@@ -2034,17 +2031,27 @@ def semantic_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered recall certificate (dedup_semantic_lsh_recall) measures
     whichever regime the mounted corpus is in; the fixture gate
     (tests/test_llm_ops.py, N ≤ 5000 → rows=3) still asserts ≥0.95."""
-    # NULL-embedding guard (r06): a NULL vector folds to sign-code 0 in
+    # Live-vector guard: a NULL or zero vector folds to sign-code 0 in
     # every band, so a NULL-heavy slice piles into one bucket per band
     # and the candidate join goes quadratic in the NULL count (measured
-    # on the nulls probe fixture: 208 NULL vectors → 23k junk candidate
-    # pairs). The oracle applies the identical filter; on NULL-free
-    # production data both are no-ops, so prior driver hashes stand.
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull())
-        .select("vec_id", as_double("embedding").alias("v"))
+    # r06 on the nulls probe fixture: 208 NULL vectors → 23k junk
+    # candidate pairs), and its cosine is undefined. ``live`` drops
+    # both, below the candidate and the refine stage alike. The oracle
+    # keeps ``WHERE embedding IS NOT NULL``, which is the same filter on
+    # corpora without zero vectors (all of the testdata), so the output
+    # hashes are unchanged.
+    #
+    # The refine stage keeps the RAW float arrays through the candidate
+    # joins (dot_float casts per element inside the fold — bit-identical,
+    # see functions/vectors.py::pair_cos): the joined pair rows carry
+    # half the bytes, measured −20% on this stage at sf0.1.
+    embf = live(
+        load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", F.col("embedding").alias("vf")
+        ),
+        as_double("vf"),
     )
+    emb = embf.select("vec_id", as_double("vf").alias("v"))
     # Sized bank (r11): rows_per_band from the corpus count via the
     # shared ladder — rows=3 at every driver SF (N ≤ 5000: identical
     # bank, identical hashes), the measured-linear 10+log2(N/5000)
@@ -2066,22 +2073,9 @@ def semantic_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = banded_sign_candidates(
         emb, _sem_lsh_planes(spark, _SEM_LSH_BANDS, n_rows)
     )
-    # refine stage keeps the RAW float arrays through the candidate
-    # joins (dot_float casts per element inside the fold — bit-identical,
-    # see functions/vectors.py): the joined pair rows carry half the
-    # bytes, measured −20% on this stage at sf0.1.
-    embf = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").alias("vf"),
-        norm(as_double("embedding")).alias("nrm"),
-    )
     ea = embf.alias("ea")
     eb = embf.alias("eb")
-    cos = F.round(
-        dot_float(F.col("ea.vf"), F.col("eb.vf"))
-        / (F.col("ea.nrm") * F.col("eb.nrm")),
-        6,
-    )
+    cos = pair_cos("ea.vf", "eb.vf", "ea.nrm", "eb.nrm", fold=dot_float)
     return (
         cand.join(ea, F.col("vec_a") == F.col("ea.vec_id"))
         .join(eb, F.col("vec_b") == F.col("eb.vec_id"))
@@ -2509,12 +2503,10 @@ def dedup_semantic_lsh_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: exact — planes, twins, and sign bits all derive from
     md5-seeded constants and order-identical IEEE folds."""
     aug = _augmented_prod_embeddings(spark, sf_dir)
-    withn = aug.select("vec_id", "v", norm(F.col("v")).alias("nrm"))
+    withn = live(aug)
     a = withn.alias("a")
     b = withn.alias("b")
-    cos = F.round(
-        dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm")), 6
-    )
+    cos = pair_cos("a.v", "b.v", "a.nrm", "b.nrm")
     exact = (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .filter(cos >= COSINE_PROD_THRESHOLD)

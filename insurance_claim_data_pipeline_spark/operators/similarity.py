@@ -15,8 +15,13 @@ The IVF coarse quantizer is written once, as three functions every IVF
 path shares (fixed, trained, IVF-PQ, nprobe sweep): ``fixed_anchors``
 (the fixed centroid / PQ codebook vectors), ``ivf_cells`` (each
 vector's max-cosine cell) and ``ivf_probes`` (each query's best cells).
-Zero-norm and NULL vectors sit out of all of them, and out of the exact
-baseline.
+
+Every cosine path — the exact baseline, IVF, LSH, the PQ, IVF-PQ and
+binary re-ranks, MMR and the evals — takes its vectors through
+``functions.vectors.live``, so zero-norm and NULL vectors sit out as
+queries and as neighbours, and scores pairs with ``pair_cos``. The
+per-query top-k is written once (``_topk``), and so is the exact
+re-rank of a candidate shortlist (``_exact_topk``).
 """
 
 from __future__ import annotations
@@ -26,7 +31,9 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.stable import mean_e12, mean_e12_sql
-from ..functions.vectors import as_double, cosine, cosine_sql, dot, dot_sql, md5_plane, norm
+from ..functions.vectors import (
+    as_double, cosine_sql, dot, dot_sql, live, md5_plane, norm, pair_cos,
+)
 from ..functions.guards import nonzero
 from ..functions.localframe import local_frame
 from ..registry import register
@@ -51,46 +58,73 @@ SELECT query_id, neighbor_id, cos_sim, rnk FROM ranked WHERE rnk <= {TOP_K}
 """
 
 
-@register("sim_topk_bruteforce", oracle=TOPK_ORACLE, tags=("similarity", "llm", "bench"))
-def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k: broadcast the (small) query set against every
-    vector, rank per query on (rounded cosine desc, neighbor_id) — a
-    deterministic total order shared with the oracle. The scan side is
-    never shuffled; only Q·N scored rows enter the per-query top-k.
-
-    Norms are precomputed per VECTOR below the join (one fold per row
-    on the scan side, once per build row on the broadcast side), so the
-    Q·N stage evaluates only the pairwise dot — 1/3 of the fold work,
-    bit-unchanged (dedup_embedding_cosine's documented pattern)."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", as_double("embedding").alias("v"))
-        .withColumn("nrm", norm(F.col("v")))
-        # zero-norm / NULL vectors have no cosine: they sit out as
-        # queries and as neighbors, the rule of the IVF paths
-        # (ivf_cells); NULL != 0 is NULL, so NULL drops too
-        .filter(F.col("nrm") != 0)
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    scored = (
-        emb.join(F.broadcast(q), F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6
-            ).alias("cos_sim"),
+def _live_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(vec_id, v, nrm)`` — the :func:`live` double vectors of the
+    ``embeddings`` table."""
+    return live(
+        load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", as_double("embedding").alias("v")
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
+
+
+def _queries(emb: DataFrame, *keep: str) -> DataFrame:
+    """``(query_id, qv, *q<keep>)`` — the N_QUERIES demo query vectors
+    of ``emb``; callers holding a :func:`live` frame keep ``nrm``, which
+    arrives as ``qnrm``."""
+    return emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        *[F.col(c).alias(f"q{c}") for c in keep],
+    )
+
+
+def _topk(scored: DataFrame, *by: str) -> DataFrame:
+    """Each query's TOP_K rows of ``scored`` ``(*by, query_id,
+    neighbor_id, cos_sim, ...)`` with their ``rnk``, ranked on (rounded
+    cosine desc, neighbor_id) — the deterministic total order every
+    cosine oracle shares. ``by`` names extra partition keys (a sweep's
+    depth or probe count)."""
+    w = W.partitionBy(*by, "query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
     return (
         scored.select("*", F.row_number().over(w).cast("long").alias("rnk"))
         .filter(F.col("rnk") <= TOP_K)
     )
+
+
+def _exact_topk(emb: DataFrame, cand: DataFrame, *by: str) -> DataFrame:
+    """The exact re-rank of a candidate shortlist ``cand`` ``(*by,
+    query_id, neighbor_id)``: each pair joins its neighbour's vector
+    from the :func:`live` frame ``emb`` and its query's from the
+    broadcast query split, is scored by exact cosine and cut to the
+    :func:`_topk`. A pair with a zero-norm or NULL side drops at the
+    join."""
+    scored = (
+        cand.join(emb, F.col("neighbor_id") == F.col("vec_id"))
+        .join(F.broadcast(_queries(emb, "nrm")), "query_id")
+        .select(
+            *by, "query_id", "neighbor_id",
+            pair_cos("qv", "v", "qnrm", "nrm").alias("cos_sim"),
+        )
+    )
+    return _topk(scored, *by)
+
+
+@register("sim_topk_bruteforce", oracle=TOPK_ORACLE, tags=("similarity", "llm", "bench"))
+def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-k: broadcast the (small) query set against every
+    live vector, rank per query on (rounded cosine desc, neighbor_id) —
+    a deterministic total order shared with the oracle. The scan side is
+    never shuffled; only Q·N scored rows enter the per-query top-k."""
+    emb = _live_embeddings(spark, sf_dir)
+    scored = emb.join(
+        F.broadcast(_queries(emb, "nrm")), F.col("query_id") != F.col("vec_id")
+    ).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        pair_cos("qv", "v", "qnrm", "nrm").alias("cos_sim"),
+    )
+    return _topk(scored)
 
 
 N_CENTROIDS = 16
@@ -168,24 +202,24 @@ def fixed_anchors(emb: DataFrame) -> DataFrame:
 
 
 def _live_centroids(cent: DataFrame) -> DataFrame:
-    # K-sized frame, free filter; NULL != 0 is NULL, so NULL drops too
-    return cent.withColumn("cnrm", norm(F.col("c_emb"))).filter(F.col("cnrm") != 0)
+    # K-sized frame, free filter
+    return live(cent, "c_emb").withColumnRenamed("nrm", "cnrm")
 
 
 def _cell_cos(v: str, nrm: str) -> F.Column:
     """Rounded cosine of ``v`` to the centroid ``c_emb``, NULL when
     either norm is zero. Norms are precomputed per vector/centroid
-    below the joins (dedup_embedding_cosine's pattern), so the pairwise
-    stage folds only the dot — bit-unchanged."""
+    below the joins (as for ``pair_cos``), so the pairwise stage folds
+    only the dot — bit-unchanged."""
     den = F.col(nrm) * F.col("cnrm")
     return F.round(F.when(den != 0, dot(F.col(v), F.col("c_emb")) / den), 6)
 
 
 def ivf_cells(emb: DataFrame, cent: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
-    """``(vec_id, cluster, *keep)`` — every vector of ``emb`` ``(vec_id,
-    v)`` assigned to its max-cosine centroid of ``cent`` ``(c_id,
-    c_emb)``, ties to the lower c_id. ``keep`` names columns of ``emb``
-    (or ``nrm``) to carry through.
+    """``(vec_id, cluster, *keep)`` — every vector of the :func:`live`
+    frame ``emb`` ``(vec_id, v, nrm)`` assigned to its max-cosine
+    centroid of ``cent`` ``(c_id, c_emb)``, ties to the lower c_id.
+    ``keep`` names columns of ``emb`` to carry through.
 
     Struct-min argmax (ccos desc via exact negation): map-side
     combinable, so each vector's K candidate rows collapse before any
@@ -194,8 +228,7 @@ def ivf_cells(emb: DataFrame, cent: DataFrame, keep: tuple[str, ...] = ()) -> Da
     so it never compares); a caller that needs no vector keeps none, and
     its shuffle carries no 64-double payload."""
     return (
-        emb.withColumn("nrm", norm(F.col("v")))
-        .crossJoin(F.broadcast(_live_centroids(cent)))
+        emb.crossJoin(F.broadcast(_live_centroids(cent)))
         .select("vec_id", _cell_cos("v", "nrm").alias("ccos"), "c_id", *keep)
         .filter(F.col("ccos").isNotNull() & ~F.isnan("ccos"))
         .groupBy("vec_id")
@@ -208,10 +241,10 @@ def ivf_probes(
     q: DataFrame, cent: DataFrame, depth: int, keep: tuple[str, ...] = ()
 ) -> DataFrame:
     """``(query_id, probe_cluster, prnk, *keep)`` — each query of ``q``
-    ``(query_id, qv)`` probes its ``depth`` best cells of ``cent`` by
-    rounded cosine, ties to the lower c_id. ``keep`` names columns of
-    ``q`` (or ``qnrm``) to carry through. Q·K rows, one window."""
-    q = q.withColumn("qnrm", norm(F.col("qv"))).filter(F.col("qnrm") != 0)
+    ``(query_id, qv, qnrm)``, split from a :func:`live` frame, probes
+    its ``depth`` best cells of ``cent`` by rounded cosine, ties to the
+    lower c_id. ``keep`` names columns of ``q`` to carry through. Q·K
+    rows, one window."""
     w = W.partitionBy("query_id").orderBy(F.desc("qcos"), "c_id")
     return (
         q.crossJoin(F.broadcast(_live_centroids(cent)))
@@ -219,13 +252,6 @@ def ivf_probes(
         .withColumn("prnk", F.row_number().over(w))
         .filter(F.col("prnk") <= depth)
         .select("query_id", F.col("c_id").alias("probe_cluster"), "prnk", *keep)
-    )
-
-
-def _queries(emb: DataFrame) -> DataFrame:
-    """``(query_id, qv)`` — the N_QUERIES demo query vectors of ``emb``."""
-    return emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
 
 
@@ -252,9 +278,11 @@ def _ivf_topk(emb: DataFrame, cent: DataFrame) -> DataFrame:
     """IVF search given a centroid table ``(c_id, c_emb)``: assign every
     vector to its max-cosine centroid, probe each query's N_PROBE best
     cells, exact re-rank inside the probed cells. Zero-norm / NULL
-    vectors, queries and centroids sit out (:func:`ivf_cells`)."""
+    vectors and queries sit out (:func:`live`), and so do such
+    centroids (:func:`ivf_cells`)."""
+    emb = live(emb)
     clustered = ivf_cells(emb, cent, keep=("v", "nrm"))
-    probes = ivf_probes(_queries(emb), cent, N_PROBE, keep=("qv", "qnrm"))
+    probes = ivf_probes(_queries(emb, "nrm"), cent, N_PROBE, keep=("qv", "qnrm"))
     cand = (
         clustered.join(
             F.broadcast(probes),
@@ -266,17 +294,10 @@ def _ivf_topk(emb: DataFrame, cent: DataFrame) -> DataFrame:
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6
-        ).alias("cos_sim"),
-    )
-    w_rank = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.select("*", F.row_number().over(w_rank).cast("long").alias("rnk"))
-        .filter(F.col("rnk") <= TOP_K)
+    return _topk(
+        cand.select(
+            "query_id", "neighbor_id", pair_cos("qv", "v", "qnrm", "nrm").alias("cos_sim")
+        )
     )
 
 
@@ -332,11 +353,12 @@ def train_ivf_centroids(emb: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
     # for K rows the driver already holds. A VALUES-literal
     # LocalRelation broadcasts directly.
     cent = local_frame(spark, sorted(prev.items()), "c_id int, c_emb array<double>")
+    # a zero-norm or NULL vector sits out every round
+    vecs = live(emb)
     for _ in range(iters):
-        # v rides through the assignment to the per-cell means; a
-        # zero-norm or NULL vector sits out the round (ivf_cells)
+        # v rides through the assignment to the per-cell means
         means = (
-            ivf_cells(emb, cent, keep=("v",))
+            ivf_cells(vecs, cent, keep=("v",))
             .select(F.col("cluster").alias("c_id"), F.posexplode("v").alias("dim", "val"))
             .groupBy("c_id", "dim")
             .agg(mean_e12("val").alias("m"))
@@ -618,24 +640,19 @@ def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.first("v").alias("v"),
         F.sum(F.expr("shiftleft(cast(bit as bigint), plane)")).alias("bucket"),
     )
-    # norms precomputed per vector (dedup_embedding_cosine's pattern):
-    # the candidate stage folds only the dot, bit-unchanged
-    data = bucketed.select("vec_id", "v", "bucket", norm(F.col("v")).alias("nrm"))
-    queries = data.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("bucket").alias("qb"),
-        F.col("nrm").alias("qnrm"),
-    )
+    data = live(bucketed)
     # multi-probe: own bucket + flip each bit once
-    probes = queries.select(
+    probes = _queries(data, "nrm", "bucket").select(
         "query_id",
         "qv",
         "qnrm",
         F.explode(
             F.array(
-                F.col("qb"),
-                *[F.expr(f"cast(qb as bigint) ^ cast({1 << p} as bigint)") for p in range(N_PLANES)],
+                F.col("qbucket"),
+                *[
+                    F.expr(f"cast(qbucket as bigint) ^ cast({1 << p} as bigint)")
+                    for p in range(N_PLANES)
+                ],
             )
         ).alias("probe_bucket"),
     )
@@ -643,24 +660,12 @@ def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(probes),
         (F.col("bucket") == F.col("probe_bucket")) & (F.col("vec_id") != F.col("query_id")),
     ).select(
-        "query_id",
-        "qv",
-        "qnrm",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("nv"),
-        F.col("nrm").alias("nnrm"),
+        "query_id", "qv", "qnrm", F.col("vec_id").alias("neighbor_id"), "v", "nrm"
     ).dropDuplicates(["query_id", "neighbor_id"])
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            dot(F.col("qv"), F.col("nv")) / (F.col("qnrm") * F.col("nnrm")), 6
-        ).alias("cos_sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.select("*", F.row_number().over(w).cast("long").alias("rnk"))
-        .filter(F.col("rnk") <= TOP_K)
+    return _topk(
+        cand.select(
+            "query_id", "neighbor_id", pair_cos("qv", "v", "qnrm", "nrm").alias("cos_sim")
+        )
     )
 
 
@@ -714,10 +719,12 @@ def emb_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled on a wide key — at 100 TB the explode shuffle carries
     |labels|·D·P partial cells, not N·D rows, thanks to partial
     aggregation."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    ex = emb.select(
-        "vec_id", "label", F.posexplode(as_double("embedding")).alias("pos", "val")
+    emb = live(
+        load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "label", as_double("embedding").alias("v")
+        )
     )
+    ex = emb.select("vec_id", "label", F.posexplode("v").alias("pos", "val"))
     cent = ex.groupBy("label", "pos").agg(mean_e12("val").alias("cval"))
     centarr = (
         cent.groupBy("label")
@@ -726,13 +733,7 @@ def emb_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cnrm", norm(F.col("centroid")))  # folded once per label
     )
     scored = emb.join(F.broadcast(centarr), "label").select(
-        "vec_id",
-        "label",
-        F.round(
-            dot(as_double("embedding"), F.col("centroid"))
-            / (norm(as_double("embedding")) * F.col("cnrm")),
-            6,
-        ).alias("cos_centroid"),
+        "vec_id", "label", pair_cos("v", "centroid", "nrm", "cnrm").alias("cos_centroid")
     )
     w = W.partitionBy("label").orderBy(F.col("cos_centroid").asc(), "vec_id")
     return (
@@ -1002,24 +1003,7 @@ def sim_topk_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("srnk") <= PQ_SHORTLIST)
         .select("query_id", "neighbor_id")
     )
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-    q = _queries(emb)
-    rescored = (
-        shortlist.join(emb, F.col("neighbor_id") == F.col("vec_id"))
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        rescored.select("*", F.row_number().over(w2).cast("long").alias("rnk"))
-        .filter(F.col("rnk") <= TOP_K)
-    )
+    return _exact_topk(_live_embeddings(spark, sf_dir), shortlist)
 
 
 def _ivfpq_oracle() -> str:
@@ -1112,13 +1096,11 @@ def _ivfpq_adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(query_id, neighbor_id, adc_dist_e6)`` over probed cells only
     — the IVF-restricted ADC scan shared by sim_topk_ivfpq and its
     re-ranked variant. Zero-norm / NULL vectors and queries sit out
-    (:func:`ivf_cells`)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
+    (:func:`live`)."""
+    emb = _live_embeddings(spark, sf_dir)
     cent = fixed_anchors(emb)
     clustered = ivf_cells(emb, cent)
-    probes = ivf_probes(_queries(emb), cent, N_PROBE)
+    probes = ivf_probes(_queries(emb, "nrm"), cent, N_PROBE)
     # (vec, m, k, cluster): codes + cell in one vec_id-keyed join — the
     # materialized index layout. Probe restriction is a broadcast join
     # on cluster (Q·N_PROBE rows), then the ADC LUT lookup.
@@ -1422,11 +1404,7 @@ def emb_l2_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     green on a wrong plan). The rounding therefore happens in a
     SEPARATE outer projection; tests/test_guards_r10.py pins the
     resolution rule."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-    nrm = F.sqrt(dot(F.col("v"), F.col("v")))
-    with_norm = emb.select("vec_id", "v", nrm.alias("nrm"))
+    with_norm = _live_embeddings(spark, sf_dir)
     q = F.transform(
         "v",
         lambda x: (
@@ -1889,20 +1867,13 @@ def sim_topk_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pool and its pairwise sims). Scores are rounded at 6 dp before
     each argmax with a neighbor_id tie-break, so the greedy path is
     engine-identical; the oracle unrolls the same five steps as CTEs."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    scored = emb.join(F.broadcast(q), F.col("query_id") != F.col("vec_id")).select(
+    emb = _live_embeddings(spark, sf_dir)
+    scored = emb.join(
+        F.broadcast(_queries(emb, "nrm")), F.col("query_id") != F.col("vec_id")
+    ).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6
-        ).alias("rel"),
+        pair_cos("qv", "v", "qnrm", "nrm").alias("rel"),
         "v",
         "nrm",
     )
@@ -1936,11 +1907,7 @@ def sim_topk_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("pa.query_id").alias("query_id"),
             F.col("pa.neighbor_id").alias("a_id"),
             F.col("pb.neighbor_id").alias("b_id"),
-            F.round(
-                dot(F.col("pa.v"), F.col("pb.v"))
-                / (F.col("pa.nrm") * F.col("pb.nrm")),
-                6,
-            ).alias("sim"),
+            pair_cos("pa.v", "pb.v", "pa.nrm", "pb.nrm").alias("sim"),
         )
         .transform(pin)  # reused by each step
     )
@@ -2101,12 +2068,13 @@ def emb_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_embedding_cosine); at corpus scale the candidate stage swaps
     in the IVF/PQ path and the voting/eval frames are unchanged.
     Rounded similarities + id/label tie-breaks keep the vote
-    deterministic in both engines. Norms are precomputed per vector
-    below the join, so the Q·N stage folds only the dot
-    (dedup_embedding_cosine's pattern, bit-unchanged)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", as_double("embedding").alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
+    deterministic in both engines. Zero-norm and NULL vectors sit out
+    (``live``), and the Q·N stage folds only the dot (``pair_cos``)."""
+    emb = live(
+        load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "label", as_double("embedding").alias("v")
+        )
+    )
     q = emb.filter(F.col("vec_id") % KNN_SAMPLE_MOD == 0).select(
         F.col("vec_id").alias("qid"),
         F.col("label").alias("true_label"),
@@ -2117,9 +2085,7 @@ def emb_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qid",
         "true_label",
         F.col("label").alias("n_label"),
-        F.round(
-            dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6
-        ).alias("sim"),
+        pair_cos("qv", "v", "qnrm", "nrm").alias("sim"),
         "vec_id",
     )
     w = W.partitionBy("qid").orderBy(F.desc("sim"), "vec_id")
@@ -2451,30 +2417,13 @@ def sim_topk_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe set, code ranking, refine cut — is hash-proven end to end,
     not just per stage."""
     adc = _ivfpq_adc_scored(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-    q = _queries(emb)
     w = W.partitionBy("query_id").orderBy("adc_dist_e6", "neighbor_id")
     shortlist = (
         adc.select("*", F.row_number().over(w).alias("srnk"))
         .filter(F.col("srnk") <= PQ_SHORTLIST)
         .select("query_id", "neighbor_id")
     )
-    rescored = (
-        shortlist.join(emb, F.col("neighbor_id") == F.col("vec_id"))
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        rescored.select("*", F.row_number().over(w2).cast("long").alias("rnk"))
-        .filter(F.col("rnk") <= TOP_K)
-    )
+    return _exact_topk(_live_embeddings(spark, sf_dir), shortlist)
 
 
 MATRYOSHKA_DIMS = 16  # prefix dims for the truncated index
@@ -2527,26 +2476,18 @@ def emb_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold work), two per-query top-k windows, one Q·k-sized eval join."""
     emb = load_table(spark, sf_dir, "embeddings")
     full = sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    t = emb.select(
-        "vec_id", as_double(F.slice("embedding", 1, MATRYOSHKA_DIMS)).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
-    q = t.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
+    t = live(
+        emb.select("vec_id", as_double(F.slice("embedding", 1, MATRYOSHKA_DIMS)).alias("v"))
     )
-    scored = t.join(F.broadcast(q), F.col("query_id") != F.col("vec_id")).select(
+    scored = t.join(
+        F.broadcast(_queries(t, "nrm")), F.col("query_id") != F.col("vec_id")
+    ).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6
-        ).alias("cos_sim"),
+        pair_cos("qv", "v", "qnrm", "nrm").alias("cos_sim"),
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    trunc_rank = (
-        scored.select("*", F.row_number().over(w).alias("rnk"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", F.col("neighbor_id").alias("t_neighbor"))
+    trunc_rank = _topk(scored).select(
+        "query_id", F.col("neighbor_id").alias("t_neighbor")
     )
     return (
         full.join(
@@ -2646,27 +2587,22 @@ def sim_topk_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen, no HOF lambda, identical expression text in
     the oracle. Scale: codes build in one narrow pass; the scan
     touches 16 bytes/vector against broadcast query words."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-    code = emb.select(
+    code = _live_embeddings(spark, sf_dir).select(
         "vec_id",
         "v",
+        "nrm",
         F.expr(f"CAST({_sign_word_spark('v', 0)} AS BIGINT)").alias("w0"),
         F.expr(f"CAST({_sign_word_spark('v', 32)} AS BIGINT)").alias("w1"),
     )
-    q = code.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("w0").alias("q0"),
-        F.col("w1").alias("q1"),
-    )
+    q = _queries(code, "nrm", "w0", "w1")
     scored = code.join(F.broadcast(q), F.col("query_id") != F.col("vec_id")).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
         "v",
+        "nrm",
         "qv",
-        F.expr("CAST(bit_count(w0 ^ q0) + bit_count(w1 ^ q1) AS BIGINT)").alias(
+        "qnrm",
+        F.expr("CAST(bit_count(w0 ^ qw0) + bit_count(w1 ^ qw1) AS BIGINT)").alias(
             "hamming"
         ),
     )
@@ -2675,15 +2611,10 @@ def sim_topk_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.select("*", F.row_number().over(ws).alias("srnk"))
         .filter(F.col("srnk") <= BQ_SHORTLIST)
     )
-    rescored = shortlist.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        rescored.select("*", F.row_number().over(w2).cast("long").alias("rnk"))
-        .filter(F.col("rnk") <= TOP_K)
+    return _topk(
+        shortlist.select(
+            "query_id", "neighbor_id", pair_cos("qv", "v", "qnrm", "nrm").alias("cos_sim")
+        )
     )
 
 
@@ -2889,13 +2820,10 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep points — candidates fan out by probe depth (a 1..P explode of
     the probe table), so the sweep costs one extra narrow dimension,
     not P independent index scans."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
+    emb = _live_embeddings(spark, sf_dir)
     cent = fixed_anchors(emb)
     clustered = ivf_cells(emb, cent)
-    probes = ivf_probes(_queries(emb), cent, NPROBE_MAX)
-    emb = emb.withColumn("nrm", norm(F.col("v")))
+    probes = ivf_probes(_queries(emb, "nrm"), cent, NPROBE_MAX)
     ps = spark.range(1, NPROBE_MAX + 1).select(F.col("id").cast("int").alias("np"))
     cand = (
         clustered.join(
@@ -2906,28 +2834,8 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("prnk") <= F.col("np"))
         .select("np", "query_id", F.col("vec_id").alias("neighbor_id"))
     )
-    qe = emb.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv2"),
-        F.col("nrm").alias("qnrm2"),
-    )
-    scored = (
-        cand.join(emb, F.col("neighbor_id") == F.col("vec_id"))
-        .join(F.broadcast(qe), "query_id")
-        .select(
-            "np",
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("qv2"), F.col("v")) / (F.col("qnrm2") * F.col("nrm")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    wr = W.partitionBy("np", "query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    ranked = (
-        scored.select("*", F.row_number().over(wr).alias("rnk"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("np", "query_id", F.col("neighbor_id").alias("r_neighbor"))
+    ranked = _exact_topk(emb, cand, "np").select(
+        "np", "query_id", F.col("neighbor_id").alias("r_neighbor")
     )
     exact = sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     joined = (
@@ -3111,13 +3019,9 @@ def emb_isotropy_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quantize-then-sum), the identity is exact integer algebra, and
     the mean is floor division — hash-stable at any parallelism, O(n)
     at any corpus size."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        as_double("embedding").alias("v")
-    )
-    nrm = F.sqrt(dot(F.col("v"), F.col("v")))
-    q = emb.select(
+    q = _live_embeddings(spark, sf_dir).select(
         *[
-            F.round(F.element_at("v", j) / nrm * 1_000_000)
+            F.round(F.element_at("v", j) / F.col("nrm") * 1_000_000)
             .cast("long")
             .alias(f"q{j}")
             for j in range(1, 65)
@@ -3206,28 +3110,14 @@ def sim_rerank_depth_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("srnk") <= max(RERANK_DEPTHS))
         .select("query_id", "neighbor_id", "srnk")
     )
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-    q = _queries(emb)
     ds = local_frame(spark, [(d,) for d in RERANK_DEPTHS], "depth int")
-    resc = (
-        shortlist.join(emb, F.col("neighbor_id") == F.col("vec_id"))
-        .join(F.broadcast(q), "query_id")
-        .crossJoin(F.broadcast(ds))
+    cand = (
+        shortlist.crossJoin(F.broadcast(ds))
         .filter(F.col("srnk") <= F.col("depth"))
-        .select(
-            "depth",
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
-        )
+        .select("depth", "query_id", "neighbor_id")
     )
-    wr = W.partitionBy("depth", "query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    ranked = (
-        resc.select("*", F.row_number().over(wr).alias("rnk"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("depth", "query_id", F.col("neighbor_id").alias("r_neighbor"))
+    ranked = _exact_topk(_live_embeddings(spark, sf_dir), cand, "depth").select(
+        "depth", "query_id", F.col("neighbor_id").alias("r_neighbor")
     )
     exact = sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     joined = exact.crossJoin(

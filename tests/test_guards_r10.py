@@ -20,8 +20,10 @@ alone passes NULLs; a NULL struct field sorts FIRST and therefore WINS
 3. ``train_ivf_centroids`` had the same assignment pattern — same fix.
 4. The IVF-PQ scan and the nprobe sweep kept their own unguarded
    copies of the quantizer, and the exact baseline divided by a zero
-   norm too. All IVF paths now share ``ivf_cells`` / ``ivf_probes``,
-   and ``sim_topk_bruteforce`` skips zero-norm and NULL vectors.
+   norm too. All IVF paths now share ``ivf_cells`` / ``ivf_probes``.
+   Every cosine path now takes its vectors through
+   ``functions.vectors.live``, so a zero-norm or NULL vector sits out
+   of all 35 queries that read ``embeddings``.
 5. ``sim_topk_l2``'s window and ``_pq_best``'s struct min sorted NULL
    distances first, so a NULL vector ranked as the nearest neighbour
    and a NULL anchor won the PQ code; both now put NULLs last, as
@@ -32,9 +34,12 @@ from __future__ import annotations
 
 import math
 import os
+import re
 
 import pyspark.sql.functions as F
+import pytest
 
+from insurance_claim_data_pipeline_spark import registry
 from insurance_claim_data_pipeline_spark.operators import similarity
 from insurance_claim_data_pipeline_spark.operators.graph import graph_link_prediction
 
@@ -135,32 +140,56 @@ def _degenerate_corpus(tmp_path, zero_ids=ZERO_IDS, null_ids=NULL_IDS) -> str:
     return str(tmp_path)
 
 
-def test_every_ivf_path_lets_zero_norm_and_null_vectors_sit_out(spark, tmp_path):
-    # Every IVF path assigns cells through similarity.ivf_cells and
-    # ranks probes through similarity.ivf_probes, so the guards of
-    # _ivf_topk above hold for the IVF-PQ scan and the nprobe sweep too,
-    # and the exact side (sim_topk_bruteforce) skips the same vectors.
-    # Before, a zero vector crashed these four queries with ANSI
-    # DIVIDE_BY_ZERO, and the unguarded struct-max put every NULL
-    # vector into the first cell, where the ADC scan scored it.
-    sf = _degenerate_corpus(tmp_path)
+def _embeddings_readers() -> list[str]:
+    """Every batch query that reads ``embeddings``: the names whose
+    tests/plan_budget.txt line scans it, plus sim_topk_mmr, whose line
+    reads ``scans=-`` because its final frame reads its pins."""
+    budget = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plan_budget.txt")
+    with open(budget) as f:
+        names = [line.split()[0] for line in f if re.search(r"[=,]embeddings:", line)]
+    return names + ["sim_topk_mmr"]
+
+
+# Ranked by L2 or ADC distance, which a zero vector has, so these may
+# list it.
+DISTANCE_RANKED = {"sim_topk_l2", "sim_topk_pq", "sim_topk_rrf_fusion"}
+# Query-keyed outputs whose query set is exactly the live demo queries.
+ALL_LIVE_QUERIES = {
+    "sim_topk_bruteforce", "sim_topk_ivfpq", "sim_topk_ivfpq_rerank", "sim_ivf_recall_eval",
+}
+
+
+@pytest.fixture(scope="module")
+def degenerate_sf(tmp_path_factory):
+    return _degenerate_corpus(tmp_path_factory.mktemp("degenerate"))
+
+
+@pytest.mark.parametrize("name", _embeddings_readers())
+def test_every_embeddings_reader_lets_zero_norm_and_null_vectors_sit_out(
+    spark, degenerate_sf, name
+):
+    # Every cosine path takes its vectors through vectors.live, so a
+    # zero or NULL vector sits out as a query and as a neighbour. Before,
+    # 16 of these queries raised ANSI DIVIDE_BY_ZERO on this corpus,
+    # three of them (the eager pins of dedup_semantic_components, the
+    # flagship and sim_topk_mmr) already while the frame was built.
     bad = ZERO_IDS | NULL_IDS
-    adc = similarity._ivfpq_adc_scored(spark, sf).collect()
-    assert adc
-    assert not {r["neighbor_id"] for r in adc} & bad
-    assert not {r["query_id"] for r in adc} & bad
-    exact = similarity.sim_topk_bruteforce(spark, sf).collect()
-    assert not {r["neighbor_id"] for r in exact} & bad
-    for fn in (
-        similarity.sim_topk_bruteforce,
-        similarity.sim_topk_ivfpq,
-        similarity.sim_topk_ivfpq_rerank,
-        similarity.sim_ivf_recall_eval,
-    ):
-        qids = {r["query_id"] for r in fn(spark, sf).collect()}
-        assert qids == set(range(similarity.N_QUERIES)) - bad, fn.__name__
-    sweep = similarity.sim_ivf_nprobe_sweep(spark, sf).collect()
-    assert sorted(r["np"] for r in sweep) == list(range(1, similarity.NPROBE_MAX + 1))
+    out = registry.queries()[name](spark, degenerate_sf)
+    rows = out.collect()
+    if name not in DISTANCE_RANKED:
+        for col in {"query_id", "neighbor_id", "vec_a", "vec_b"} & set(out.columns):
+            assert not {r[col] for r in rows} & bad, col
+    if name in ALL_LIVE_QUERIES:
+        assert {r["query_id"] for r in rows} == set(range(similarity.N_QUERIES)) - bad
+    if name == "sim_topk_ivfpq":
+        # the unguarded struct-max once put every NULL vector into the
+        # first cell, where the ADC scan scored it
+        adc = similarity._ivfpq_adc_scored(spark, degenerate_sf).collect()
+        assert adc
+        assert not {r["neighbor_id"] for r in adc} & bad
+        assert not {r["query_id"] for r in adc} & bad
+    if name == "sim_ivf_nprobe_sweep":
+        assert sorted(r["np"] for r in rows) == list(range(1, similarity.NPROBE_MAX + 1))
 
 
 def test_l2_topk_ranks_null_vectors_last(spark, tmp_path):

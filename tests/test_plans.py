@@ -100,7 +100,6 @@ JVM_ONLY_QUERIES = [
     "events_dwell_time",
     "agg_histogram",
     "text_chunk_overlap",
-    "emb_l2_normalize",
     "dedup_containment_ngram",
     "graph_triangle_copurchase",
     "warehouse_incremental_agg",
@@ -159,8 +158,6 @@ JVM_ONLY_QUERIES = [
     "agg_kmv_distinct",
     # round-4 late-session additions — all pure Column/SQL expressions
     "sim_topk_ivfpq",
-    "sim_topk_pq_rerank",
-    "sim_ndcg_eval",
     "emb_pca_project",
     "text_span_dedup",
     "text_perplexity_buckets",
